@@ -159,21 +159,18 @@ object Catalog {
   def tableSpread(spark: SparkSession, dir: String, name: String): DataFrame =
     table(spark, dir, name).repartition(spark.sparkContext.defaultParallelism)
 
-  /** A fresh temp directory with a recursive-delete shutdown hook — the
-    * one definition of the pattern the streaming sinks and shard stores
-    * previously copy-pasted eight times (any fix to the cleanup logic now
-    * lands once). Callers that run once per (JVM, dir) should memoize the
-    * result (the s10 discipline) — each call registers one hook. */
-  def tempDirWithCleanup(prefix: String): java.nio.file.Path = {
-    // Optional base override (SPARK_GRAFT_TMPDIR) — the r19 streaming-floor
-    // rig points it at tmpfs to separate checkpoint-I/O cost from
-    // micro-batch machinery cost. Default stays java.io.tmpdir.
+  /** JVM-wide parent of every [[tempDirWithCleanup]] directory, with the
+    * one shutdown hook that deletes it recursively. Optional base override
+    * (SPARK_GRAFT_TMPDIR) — the r19 streaming-floor rig points it at tmpfs
+    * to separate checkpoint-I/O cost from micro-batch machinery cost.
+    * Default stays java.io.tmpdir. */
+  private lazy val tempBase: java.nio.file.Path = {
     val d = sys.env.get("SPARK_GRAFT_TMPDIR") match {
       case Some(base) =>
         val b = java.nio.file.Paths.get(base)
         java.nio.file.Files.createDirectories(b)
-        java.nio.file.Files.createTempDirectory(b, prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
+        java.nio.file.Files.createTempDirectory(b, "graft-tmp")
+      case None => java.nio.file.Files.createTempDirectory("graft-tmp")
     }
     sys.addShutdownHook {
       def rm(f: java.io.File): Unit = {
@@ -183,4 +180,10 @@ object Catalog {
     }
     d
   }
+
+  /** A fresh temp directory, deleted at JVM exit. Every call hands out a
+    * new subdirectory of one JVM-wide base, so repeated runs of a query
+    * add no shutdown hook. */
+  def tempDirWithCleanup(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(tempBase, prefix)
 }

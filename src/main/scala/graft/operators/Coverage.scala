@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Catalog, Sql}
+import graft.Catalog
 import graft.Sql._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -257,16 +257,17 @@ object Coverage {
     * and can never hash-match across engines. Still one partial+final
     * aggregation pass at scale. */
   def q24Stats(spark: SparkSession, dir: String): DataFrame = {
-    val q = dec(col("l_quantity")); val p = dec(col("l_extendedprice"))
+    // cents; a product of two is the DECIMAL(25,4) dec(a) * dec(b)
+    val q = units(col("l_quantity")); val p = units(col("l_extendedprice"))
     val agg = t(spark, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         count(lit(1)).as("n"),
-        sum(q).cast(DoubleType).as("s1"),
-        sum(q * q).cast(DoubleType).as("s2"),
-        sum(p).cast(DoubleType).as("sp"),
-        sum(p * p).cast(DoubleType).as("sp2"),
-        sum(q * p).cast(DoubleType).as("sqp"))
+        moneySum(q, Money).cast(DoubleType).as("s1"),
+        moneySum(q, q, MoneyProduct).cast(DoubleType).as("s2"),
+        moneySum(p, Money).cast(DoubleType).as("sp"),
+        moneySum(p, p, MoneyProduct).cast(DoubleType).as("sp2"),
+        moneySum(q, p, MoneyProduct).cast(DoubleType).as("sqp"))
     val n = col("n").cast(DoubleType)
     // derived statistics rounded to 9 decimals: the component sums are
     // exact, but the composed double arithmetic can differ by 1 ULP across
@@ -360,11 +361,12 @@ object Coverage {
       .join(broadcast(t(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"), col("c_mktsegment"))
       .agg(count(lit(1)).as("pn"),
-        sum(Sql.revenue(col("l_extendedprice"), col("l_discount"))).as("prev"))
+        moneySum(units(col("l_extendedprice")), revenueFactor(col("l_discount")), Revenue)
+          .as("prev"))
     perSeg
       .rollup(col("r_name"), col("n_name"))
       .agg(sum(col("pn")).as("n_lines"),
-        sum(col("prev")).cast(org.apache.spark.sql.types.DoubleType).as("revenue"),
+        moneySum(col("prev"), sumType(Revenue)).cast(DoubleType).as("revenue"),
         // size(collect_set), NOT countDistinct: a mixed distinct+regular
         // agg plans a RewriteDistinctAggregates Expand (×2 projections)
         // ON TOP of rollup's — and the set is now built over the tiny

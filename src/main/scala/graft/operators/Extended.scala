@@ -639,7 +639,8 @@ object Extended {
     Catalog.table(spark, dir, "orders")
       .withColumn("epoch_s", unix_timestamp(col("o_orderdate")))
       .withColumn("n_orders_90d", count(lit(1)).over(w))
-      .withColumn("sum_price_90d", sum(dec(col("o_totalprice"))).over(w).cast(DoubleType))
+      .withColumn("sum_price_90d",
+        moneySum(units(col("o_totalprice")), Money).over(w).cast(DoubleType))
       .select(col("o_orderkey"), col("o_custkey"), col("n_orders_90d"), col("sum_price_90d"))
       .orderBy("o_orderkey")
   }
@@ -1086,7 +1087,7 @@ object Extended {
         sum(when(col("l_quantity").isNull, 1L).otherwise(0L)).as("null_qty"))
       .filter(col("l_quantity") > ObsQtyFloor)
       .observe(obsKept, count(lit(1)).as("rows_kept"),
-        sum(dec(col("l_extendedprice"))).as("kept_revenue"))
+        dsum(col("l_extendedprice")).as("kept_revenue"))
     staged.write.format("noop").mode("overwrite").save()
     // the observe/CollectMetrics pipeline bypasses query-stage prep, so
     // the eager audit's capture hook sees nothing from the noop action:
@@ -1106,8 +1107,7 @@ object Extended {
     // a filter keeping zero rows observes a NULL sum (and an empty scan a
     // zero rows_in) — guard both so the audit report degrades to zeros
     // instead of an NPE/NaN
-    val revenue = Option(kept("kept_revenue"))
-      .map(_.asInstanceOf[java.math.BigDecimal].doubleValue).getOrElse(0.0)
+    val revenue = Option(kept("kept_revenue")).map(_.asInstanceOf[Double]).getOrElse(0.0)
     val schema = StructType(Seq(
       StructField("rows_in", LongType, nullable = false),
       StructField("null_qty", LongType, nullable = false),

@@ -112,7 +112,8 @@ object Relational {
       .filter(
         col("l_shipdate") >= ts("1996-01-01") && col("l_shipdate") < ts("1998-01-01") &&
           col("l_discount").between(0.015, 0.065) && col("l_quantity") < 24)
-      .agg(sum(dec(col("l_extendedprice")) * dec(col("l_discount"))).cast(DoubleType).as("revenue"),
+      .agg(moneySum(units(col("l_extendedprice")), units(col("l_discount")), MoneyProduct)
+        .cast(DoubleType).as("revenue"),
         count(lit(1)).as("n_rows"))
 
   // --- anti join (NOT EXISTS) ---------------------------------------------
@@ -143,7 +144,7 @@ object Relational {
     t(spark, dir, "lineitem")
       .filter(col("l_shipdate") < ts("1995-07-01"))
       .withColumn("running_qty",
-        sum(dec(col("l_quantity")))
+        moneySum(units(col("l_quantity")), Money)
           .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
           .cast(DoubleType))
       .withColumn("prev_qty", lag(col("l_quantity"), 1).over(w))
@@ -245,14 +246,18 @@ object Relational {
     val li = t(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01"))
     val part = t(spark, dir, "part")
-    val rev = revenue(col("l_extendedprice"), col("l_discount"))
+    val price = col("l_extendedprice"); val disc = col("l_discount")
+    // promo revenue ≡ sum(when(promo, revenue).otherwise(0)): a non-promo
+    // row adds 0 × 0 (non-null, as the 0 it stood for)
+    val promo = col("p_type") === "PROMO"
     // part scales with SF — stats-driven join strategy, no broadcast pin
     li.join(part, col("l_partkey") === col("p_partkey"))
       .groupBy(date_trunc("month", col("l_shipdate")).as("mon"))
       .agg(
-        sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0).cast(Money)))
+        moneySum(when(promo, units(price)).otherwise(0L),
+          when(promo, revenueFactor(disc)).otherwise(0L), Revenue)
           .cast(DoubleType).as("promo_revenue"),
-        sum(rev).cast(DoubleType).as("total_revenue"))
+        dsumRevenue(price, disc).as("total_revenue"))
       .withColumn("promo_ratio", col("promo_revenue") / col("total_revenue"))
       .orderBy("mon")
   }
@@ -292,9 +297,10 @@ object Relational {
     t(spark, dir, "lineitem")
       .withColumn("salt", pmod(col("l_orderkey"), lit(8)))
       .groupBy(col("l_returnflag"), col("salt"))
-      .agg(sum(dec(col("l_quantity"))).as("partial_qty"), count(lit(1)).as("partial_n"))
+      .agg(moneySum(units(col("l_quantity")), Money).as("partial_qty"),
+        count(lit(1)).as("partial_n"))
       .groupBy(col("l_returnflag"))
-      .agg(sum(col("partial_qty")).cast(DoubleType).as("sum_qty"),
+      .agg(moneySum(col("partial_qty"), sumType(Money)).cast(DoubleType).as("sum_qty"),
         sum(col("partial_n")).as("n_rows"))
       .orderBy("l_returnflag")
 

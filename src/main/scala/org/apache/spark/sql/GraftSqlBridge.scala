@@ -1,13 +1,20 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal bridge into `private[sql]` constructors the public API does not
   * expose in Spark 4: building a DataFrame from a hand-constructed
   * LogicalPlan (needed to surface custom logical operators like
-  * graft.plans.AsOfJoinPlan). Standard extension-library pattern. */
+  * graft.plans.AsOfJoinPlan), and moving between Columns and Catalyst
+  * expressions (custom expressions such as graft.expr.MoneySum, with no
+  * function-registry entry). Standard extension-library pattern. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }

@@ -41,4 +41,17 @@ class DataContractSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("unreadable"))
   }
+
+  test("temp dirs share one JVM-wide base: N calls add at most one shutdown hook") {
+    def hooks: Int = {
+      val f = Class.forName("java.lang.ApplicationShutdownHooks").getDeclaredField("hooks")
+      f.setAccessible(true)
+      f.get(null).asInstanceOf[java.util.Map[_, _]].size
+    }
+    val before = hooks
+    val dirs = (1 to 8).map(i => Catalog.tempDirWithCleanup(s"graft-hooks-$i"))
+    assert(hooks - before <= 1)
+    assert(dirs.distinct.size == 8 && dirs.forall(java.nio.file.Files.isDirectory(_)))
+    assert(dirs.map(_.getParent).distinct.size == 1)
+  }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.types.DecimalType
 
 /** Fleet-wide physical-plan audit in two parts, with NO hand-maintained
   * skip-list (the round-9 erosion complaint):
@@ -207,6 +209,22 @@ class PlanAuditSpec extends SparkSpec {
       val shj = plan.linesIterator.count(_.contains("ShuffledHashJoin"))
       if (shj < n) Some(s"$name: expected >= $n ShuffledHashJoin, found $shj")
       else None
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  /** Money sums run in fixed-width long slots (`Sql.moneySum`); a
+    * `sum(dec(..))` creeping back into these queries brings a BigDecimal
+    * buffer slot, and a per-row BigDecimal, with it. */
+  test("money aggregates keep fixed-width buffers: no DecimalType slot in q1/q20/q3/q5") {
+    val bad = Seq("q1_pricing_summary", "q20_salted_agg", "q3_top_revenue",
+        "q5_local_supplier").flatMap { name =>
+      val aggs = SparkEntry.queries(name)(spark, sf).queryExecution.sparkPlan
+        .collect { case a: BaseAggregateExec => a }
+      assert(aggs.nonEmpty, s"$name: no aggregate in the plan")
+      aggs.flatMap(_.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes))
+        .filter(_.dataType.isInstanceOf[DecimalType])
+        .map(a => s"$name: buffer slot ${a.name} is ${a.dataType.simpleString}")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
