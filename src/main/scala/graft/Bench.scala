@@ -213,7 +213,7 @@ object Bench {
     // forked JVM's user.dir) and the absolute path actually written is
     // printed — a changed sbt fork baseDirectory must not silently
     // relocate the artifact and leave round diffs comparing a stale file.
-    // A BENCH_ONLY diagnostic run writes bench.only.json (unless an explicit
+    // A BENCH_ONLY diagnostic run writes bench.only[.c<cpus>].json (unless an explicit
     // BENCH_OUT overrides) — a one-query isolation run must never clobber
     // the full-round bench.json used for round-over-round diffing. Same
     // guard for scale factor: the committed snapshot is the sf0.1 run the
@@ -223,13 +223,14 @@ object Bench {
     // ...and for CORE COUNT (r18 verdict item 3): the driver benches at a
     // second, lower core count to measure scaling, and its c8 run overwrote
     // the 32-core run's bench.json in the same working tree — non-default
-    // core counts get a cpus-qualified name so both artifacts survive.
+    // core counts get a cpus-qualified name so both artifacts survive
+    // (BENCH_ONLY runs too: a c8 isolation A/B must not overwrite a c32 one).
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
+    val cpuPart = if (cpus == "32") "" else s".c$cpus"
     val defaultName =
-      if (only.isDefined) "bench.only.json"
+      if (only.isDefined) s"bench.only$cpuPart.json"
       else {
         val sfPart = if (sfName == "sf0.1") "" else s".$sfName"
-        val cpuPart = if (cpus == "32") "" else s".c$cpus"
         s"bench$sfPart$cpuPart.json"
       }
     val benchPath = java.nio.file.Paths.get(

@@ -45,12 +45,25 @@ object Engine {
     * their own master/parallelism from the driver environment). */
   def configure(b: SparkSession.Builder, appName: String): SparkSession.Builder = b
     .appName(appName)
-    // the eager-audit capture hook (graft.plans.PlanCapture): a volatile
-    // read + identity unless Scale's eager audit arms the sink
-    .withExtensions(ext =>
-      ext.injectQueryStagePrepRule(_ => graft.plans.PlanCapture))
+    // explicit multi-key sorts radix-sort their leading key and order the
+    // tie runs in a streaming pass (graft.plans.TieRunSort), then the
+    // eager-audit capture hook (graft.plans.PlanCapture: a volatile read +
+    // identity unless Scale's eager audit arms the sink) — in that order,
+    // so captured plans show the rewrite
+    .withExtensions { ext =>
+      ext.injectQueryStagePrepRule(_ => graft.plans.TieRunSort)
+      ext.injectQueryStagePrepRule(_ => graft.plans.PlanCapture)
+    }
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // The status store behind the (disabled) UI still records every SQL
+    // execution, job, stage and task, up to 1000 executions/jobs/stages and
+    // 100,000 tasks a stage by default, so a long session's heap grew with
+    // every query. Nothing here reads that store: keep it small.
+    .config("spark.sql.ui.retainedExecutions", "20")
+    .config("spark.ui.retainedJobs", "50")
+    .config("spark.ui.retainedStages", "50")
+    .config("spark.ui.retainedTasks", "500")
     // AQE: runtime re-planning from exact per-stage MapStatus sizes — the
     // productized form of the reference's shuffle-size predictor + balanced
     // reduce pre-scheduler (SURVEY.md §4 rows 2-3).

@@ -20,6 +20,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *     PPJoin length prune into set-similarity threshold filters;
   *   - the [[graft.plans.LshBucketRewrite]] optimizer rule — lowers the
   *     opt-in `lsh_candidates` marker into a sign-LSH bucket equi-join;
+  *   - the [[graft.plans.TieRunSort]] query-stage-prep rule — explicit
+  *     multi-key sorts radix-sort their leading key, then order the tie
+  *     runs in a streaming pass;
   *   - `vec_dot(array<double>, array<double>)` ([[graft.expr.DoubleVectorDot]]),
   *     `sorted_intersect_count(array<bigint>, array<bigint>)`
   *     ([[graft.expr.SortedLongIntersectCount]]) and
@@ -38,6 +41,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.JaccardLengthPrune)
     ext.injectOptimizerRule(_ => graft.plans.LshBucketRewrite)
+    ext.injectQueryStagePrepRule(_ => graft.plans.TieRunSort)
     ext.injectFunction(GraftExtensions.VecDot)
     ext.injectFunction(GraftExtensions.SortedIntersectCount)
     ext.injectFunction(GraftExtensions.LshCandidatesFn)

@@ -2,9 +2,12 @@ package graft.operators
 
 import graft.Catalog
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import scala.collection.mutable
 
 /** Size-aware reduce partitioner — the Spark-native form of the reference's
   * heuristic shuffle pre-scheduler (reference `sim/sim.py:223-263`,
@@ -163,8 +166,9 @@ class WeightedKeyPartitioner(
   *      size vectors the reference reads from its MapOutputTracker) — the
   *      swap pass therefore actually runs, exercised end-to-end;
   *   3. the aggregation itself: `reduceByKey` UNDER the partitioner —
-  *      map-side combine first, so the skewed key ships one partial per
-  *      input partition, never its raw rows.
+  *      each map task first folds its rows into one (count, sum) partial
+  *      per key, so the skewed key ships one partial per input partition,
+  *      never its raw rows.
   *
   * The oracle is the plain GROUP BY: the partitioner must change WHERE
   * work lands (spec-asserted within the 4/3 LPT bound on this real
@@ -193,15 +197,26 @@ object WeightedKeyPartitioner {
 
   def weightedAgg(spark: SparkSession, dir: String): DataFrame = {
     val (_, part) = partitionerFor(spark, dir)
-    val agg = skeyed(spark, dir).rdd
-      .map(r => (r.getLong(0), (1L, r.getLong(1))))
-      .reduceByKey(part, (a, b) => (a._1 + b._1, a._2 + b._2))
-      .map { case (k, (n, s)) => Row(k, n, s) }
+    // the map side reads Catalyst rows and folds each partition into one
+    // (count, sum) partial per key, so neither a Row nor a boxed pair is
+    // made per input row
+    val partials = skeyed(spark, dir).queryExecution.toRdd.mapPartitions { rows =>
+      val acc = new mutable.LongMap[Array[Long]]()
+      rows.foreach { r =>
+        val a = acc.getOrElseUpdate(r.getLong(0), new Array[Long](2))
+        a(0) += 1
+        a(1) += r.getLong(1)
+      }
+      acc.iterator
+    }
+    val agg = partials
+      .reduceByKey(part, (a, b) => Array(a(0) + b(0), a(1) + b(1)))
+      .map { case (k, a) => InternalRow(k, a(0), a(1)) }
     val schema = StructType(Seq(
       StructField("skey", LongType, nullable = false),
       StructField("n_rows", LongType, nullable = false),
       StructField("sum_partkey", LongType, nullable = false)))
-    spark.createDataFrame(agg, schema).orderBy("skey")
+    GraftSqlBridge.fromInternalRows(spark, agg, schema).orderBy("skey")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

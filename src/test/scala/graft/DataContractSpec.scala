@@ -54,4 +54,19 @@ class DataContractSpec extends SparkSpec {
     assert(dirs.distinct.size == 8 && dirs.forall(java.nio.file.Files.isDirectory(_)))
     assert(dirs.map(_.getParent).distinct.size == 1)
   }
+
+  test("the status store keeps a bounded number of SQL executions over a long session") {
+    // Engine.configure caps spark.sql.ui.retainedExecutions; past the cap,
+    // each new execution's UI record evicts an old one
+    val cap = spark.sparkContext.getConf.get("spark.sql.ui.retainedExecutions").toInt
+    val store = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.statusStore
+    (1 to 3 * cap).foreach(i => spark.range(i).selectExpr("sum(id)").collect())
+    org.apache.spark.GraftListenerBridge.drainListenerEvents(spark.sparkContext)
+    // eviction runs on the store's own thread after the listener event
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (store.executionsCount() > cap && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(store.executionsCount() <= cap,
+      s"${store.executionsCount()} SQL executions retained, cap $cap")
+  }
 }

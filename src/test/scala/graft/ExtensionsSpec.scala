@@ -36,6 +36,11 @@ class ExtensionsSpec extends SparkSpec {
       a(lp, "t"), a(rp, "rt"), a(lp, "k"), a(rp, "rk"), a(rp, "tb"))
     val joined = org.apache.spark.sql.GraftSqlBridge.ofRows(ext, plan)
     assert(joined.count() == 4)
+
+    // query-stage-prep path: an explicit two-key sort plans the tie-run pass
+    val sorted = ext.range(100).selectExpr("id % 3 AS a", "id AS b")
+      .repartition(2).sortWithinPartitions("a", "b")
+    assert(sorted.queryExecution.executedPlan.toString.contains("TieRunSort"))
   }
 
   test("closed-session emission matches batch sessionization minus each user's open session") {

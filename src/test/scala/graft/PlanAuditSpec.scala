@@ -1,7 +1,12 @@
 package graft
 
+import graft.plans.TieRunSortExec
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{SortExec, SortPrefixUtils, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types.DecimalType
 
 /** Fleet-wide physical-plan audit in two parts, with NO hand-maintained
@@ -227,5 +232,45 @@ class PlanAuditSpec extends SparkSpec {
         .map(a => s"$name: buffer slot ${a.name} is ${a.dataType.simpleString}")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  /** Explicit multi-key sorts with a prefix-sortable leading key radix-sort
+    * that key under a tie-run pass (graft.plans.TieRunSort); sorts that a
+    * join or window requires, and one-key or string-led sorts, stay
+    * `SortExec`. q19/q1/q20/w1 are read from their AQE-final plans; the
+    * window and join queries from the initial AQE plan, which is what the
+    * rule rewrites. */
+  test("TieRunSort: q19 radix-sorts its leading key; required, one-key and string sorts keep SortExec") {
+    object Aqe extends AdaptiveSparkPlanHelper
+    def finalPlan(name: String): SparkPlan = {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    def tieRuns(p: SparkPlan) = Aqe.collect(p) { case t: TieRunSortExec => t }
+
+    val q19 = tieRuns(finalPlan("q19_terasort"))
+    assert(q19.size == 1, s"q19: ${q19.size} TieRunSortExec")
+    assert(q19.head.sortOrder.map(_.child.references.map(_.name).mkString) ==
+      Seq("l_extendedprice", "l_orderkey", "l_linenumber"))
+    val inner = Aqe.collect(q19.head.child) { case s: SortExec => s }
+    assert(inner.size == 1 && inner.head.sortOrder.length == 1 && !inner.head.global,
+      s"q19: under TieRunSortExec: ${q19.head.child.treeString}")
+
+    for (name <- Seq("q1_pricing_summary", "q20_salted_agg", "w1_weighted_shuffle"))
+      assert(tieRuns(finalPlan(name)).isEmpty, s"$name: TieRunSortExec planned")
+
+    // a required multi-key sort with a prefix-sortable leading key, under
+    // the window or join that requires it, and no TieRunSortExec anywhere
+    def requiredSorts(p: SparkPlan): Seq[String] = Aqe.collect(p) {
+      case w: WindowExec => w.children.map("window" -> _)
+      case j: SortMergeJoinExec => j.children.map("join" -> _)
+    }.flatten.collect { case (kind, s: SortExec) if s.sortOrder.length >= 2 &&
+      SortPrefixUtils.canSortFullyWithPrefix(s.sortOrder.head) => kind }
+    for ((name, kind) <- Seq("x13_range_frame" -> "window", "dd20_boundary_recall" -> "join")) {
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+      assert(requiredSorts(plan).contains(kind), s"$name: no multi-key $kind sort:\n$plan")
+      assert(tieRuns(plan).isEmpty, s"$name: a required sort was rewritten:\n$plan")
+    }
   }
 }
