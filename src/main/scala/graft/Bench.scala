@@ -165,8 +165,8 @@ object Bench {
       drain()
       val shuffle = (tm.shuffleRead.get - sr0, tm.shuffleWrite.get - sw0,
         tm.spill.get - sp0)
-      // Cache lifecycle is owned by the OPERATORS (each unpersists its
-      // predecessor and re-keys per (session, dir)), not by a blanket
+      // Cache lifecycle is owned by graft.Landed (one live entry per
+      // artifact, released on displacement), not by a blanket
       // clearCache here: r12 made dd6's bigram frame / verified pairs /
       // dd8's converged labels landed session artifacts that dd8/dd9/p1
       // legitimately reuse, and clearing between queries forced every

@@ -164,7 +164,7 @@ object Catalog {
     * (SPARK_GRAFT_TMPDIR) — the r19 streaming-floor rig points it at tmpfs
     * to separate checkpoint-I/O cost from micro-batch machinery cost.
     * Default stays java.io.tmpdir. */
-  private lazy val tempBase: java.nio.file.Path = {
+  private[graft] lazy val tempBase: java.nio.file.Path = {
     val d = sys.env.get("SPARK_GRAFT_TMPDIR") match {
       case Some(base) =>
         val b = java.nio.file.Paths.get(base)
@@ -172,14 +172,16 @@ object Catalog {
         java.nio.file.Files.createTempDirectory(b, "graft-tmp")
       case None => java.nio.file.Files.createTempDirectory("graft-tmp")
     }
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(d.toFile)
-    }
+    sys.addShutdownHook(rmTree(d.toFile))
     d
   }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(): Unit
+  }
+
+  /** Delete a [[tempDirWithCleanup]] directory now instead of at exit. */
+  def deleteTempDir(dir: java.nio.file.Path): Unit = rmTree(dir.toFile)
 
   /** A fresh temp directory, deleted at JVM exit. Every call hands out a
     * new subdirectory of one JVM-wide base, so repeated runs of a query

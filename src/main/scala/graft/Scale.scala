@@ -378,9 +378,10 @@ object Scale {
       // one documented disk-variance row; runtime judged on control ratio
       ioBoundFrom = 16,
       // split: the shared bigram frame (tokenize→shingle→hash→persist)
-      // builds untimed-separately, so `sec` prices dd6's own prefix
-      // generator + candidate join + verify
-      stages = Seq("bigram_base_build" -> operators.Dedup.ensureNgramBase)),
+      // and the landed prefix rows build untimed-separately (as dd9's
+      // row does), so `sec` prices dd6's own probe + verify stages
+      stages = Seq("bigram_base_build" -> operators.Dedup.ensureNgramBase,
+        "prefix_rows_build" -> operators.Dedup.ensurePrefixRows)),
     Op("dd15_edit", operators.Dedup.editDistanceNearDup,
       (s, d) => operators.Dedup.editCandidateFrame(s, d).count(), "banded16"),
     // q29: the sweep's first RELATIONAL row (r16 — the audit now PLANS
@@ -603,7 +604,7 @@ object Scale {
       setup = (s, d) => { operators.Similarity.ensureLandedIndex(s, d): Unit },
       extra = (s, d) => Map(
         "index_blocks" ->
-          graft.sources.BlockStore.blockCount(s"annidx@$d").toLong,
+          graft.sources.BlockStore.blockCount(Landed.store("annidx@", d)).toLong,
         "blocks_opened" -> sim15BlocksOpened),
       // dictionary pruning must HOLD under blow-up: the store lands
       // ~|cells| blocks at every factor (cell-clustered write), so the

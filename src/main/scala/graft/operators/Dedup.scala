@@ -79,17 +79,6 @@ object Dedup {
   private def permA(j: Int): Long = (2L * j + 1) * 1000003L % P
   private def permB(j: Int): Long = j * 999983L % P
 
-  // persisted shingle frame, memoized by (session, dir) like the file's
-  // other corpus-pass caches (ngram/hist/pairs): the frame is a pure
-  // function of the immutable input table, and the scale harness probes
-  // the candidate count and then runs dd3 itself at the same dir in one
-  // session — release-on-next-call re-ran the tokenize→shingle→md5→sort
-  // corpus pass and re-landed the ~5x-text-size persist twice per factor.
-  // A key change still releases the previous frame, so distinct dirs in
-  // one sweep never accumulate.
-  private var lastShingleCache: Option[DataFrame] = None
-  private var lastShingleKey: Option[(SparkSession, String)] = None
-
   /** dd3's pipeline up to (and including) the BANDED candidate stage:
     * returns (persisted shingle frame, distinct candidate-pair frame).
     * Shared by [[minhashNearDup]] and the scale harness ([[graft.Scale]]),
@@ -105,42 +94,26 @@ object Dedup {
     // size(sh) > 0: predicate pushdown would inline the whole shingle
     // expression into the pre-Exchange scan filter and evaluate it on the
     // unparallelized side of the shuffle.
-    // Persisted because three arms reuse it (signature explode + both sides
-    // of the Jaccard verify join); recomputing means re-shingling the corpus
-    // per arm. MEMORY_AND_DISK: shingle arrays are ~5x the text size, and at
-    // cluster scale spilling beats recompute for this shape (the reference's
-    // all-or-nothing in-memory stance, SURVEY.md §4.5, maps to exactly this
-    // persist-level decision).
-    // Check-reuse/release-then-register in ONE synchronized block: a
-    // check-then-act window would let two concurrent callers strand a
-    // persisted copy; the unpersist is guarded because the previous frame
-    // may belong to an already-stopped session.
-    val withSh = synchronized {
-      val reusable = lastShingleKey.contains((spark, dir)) &&
-        lastShingleCache.exists(
-          _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      if (reusable) lastShingleCache.get
-      else {
-        lastShingleCache.foreach { prev =>
-          try prev.unpersist(blocking = false) catch { case _: Exception => }
-        }
-        // shh: sorted distinct 31-bit shingle hashes (md5 prefix mod P) —
-        // ONE md5 per shingle, hashed+sorted map-side behind the persist
-        // barrier. Both the signature explode and the verify join read
-        // this array; the shingle STRINGS never leave the map stage.
-        val df = tokenized
-          .filter(size(col("_toks")) >= 3)
-          .select(col("doc_id"),
-            array_sort(array_distinct(
-              transform(Text.shingles3(col("_toks")), s => Text.sharedHash(s) % P)))
-              .as("shh"))
-          .withColumn("n_sh", size(col("shh")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        lastShingleCache = Some(df)
-        lastShingleKey = Some((spark, dir))
-        df
-      }
-    }
+    // Landed (graft.Landed, barrier) because three arms reuse it (signature
+    // explode + both sides of the Jaccard verify join); recomputing means
+    // re-shingling the corpus per arm, and the scale harness probes the
+    // candidate count and then runs dd3 itself at the same dir. Persisted
+    // MEMORY_AND_DISK: shingle arrays are ~5x the text size, and at
+    // cluster scale spilling beats recompute for this shape (the
+    // reference's all-or-nothing in-memory stance, SURVEY.md §4.5, maps to
+    // exactly this persist-level decision).
+    // shh: sorted distinct 31-bit shingle hashes (md5 prefix mod P) — ONE
+    // md5 per shingle, hashed+sorted map-side behind the persist barrier.
+    // Both the signature explode and the verify join read this array; the
+    // shingle STRINGS never leave the map stage.
+    val withSh = graft.Landed.frame("dedup.shingles", spark, dir)(
+      tokenized
+        .filter(size(col("_toks")) >= 3)
+        .select(col("doc_id"),
+          array_sort(array_distinct(
+            transform(Text.shingles3(col("_toks")), s => Text.sharedHash(s) % P)))
+            .as("shh"))
+        .withColumn("n_sh", size(col("shh"))))
 
     // Explode the persisted hash array so each shingle hash feeds the 16
     // permutations ONCE — computing the signatures as array-lambda columns
@@ -261,46 +234,29 @@ object Dedup {
     * 18.4 s → 4.4 s, flat across factors). */
   private val HistChars = ("abcdefghijklmnopqrstuvwxyz0123456789 ").toSeq
 
-  // memoized (session, dir)-keyed persisted (doc_id, simhash, text, lt,
-  // lb0, hist) frame: the histogram chain (37 replace+length scans per
-  // doc) MUST materialize behind an InMemoryRelation barrier — left lazy,
-  // the optimizer inlines the whole chain into the bucket join's L1
-  // filter, re-evaluating 37 string scans per CANDIDATE PAIR instead of
-  // per doc (measured: ×1 6.9 s vs 3.4 s, ×32 23 s — worse than the DP
-  // it was pruning)
-  private var lastHistCache: Option[DataFrame] = None
-  private var lastHistKey: Option[(SparkSession, String)] = None
-
+  // landed (graft.Landed, barrier) (doc_id, simhash, text, lt, lb0, hist)
+  // frame: the histogram chain (37 replace+length scans per doc) MUST
+  // materialize behind an InMemoryRelation barrier — left lazy, the
+  // optimizer inlines the whole chain into the bucket join's L1 filter,
+  // re-evaluating 37 string scans per CANDIDATE PAIR instead of per doc
+  // (measured: ×1 6.9 s vs 3.4 s, ×32 23 s — worse than the DP it was
+  // pruning)
   private def editHistFrame(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val reusable = lastHistKey.contains((spark, dir)) &&
-        lastHistCache.exists(
-          _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      if (reusable) lastHistCache.get
-      else {
-        lastHistCache.foreach { prev =>
-          try prev.unpersist(blocking = false) catch { case _: Exception => }
-        }
-        // hist lane 0 = total length, lanes 1.. = tracked-char counts —
-        // the [[graft.expr.VectorExpressions.IntHistL1]] layout
-        // shuffle-hash pin (corpus ⋈ corpus on doc_id): unhinted, the
-        // planner's estimate broadcasts one corpus-sized side — see
-        // ngramCandidateFrame's scaladoc for the full finding. The hinted
-        // (narrow 16-byte simhash) side is the per-partition build.
-        val df = simhashOf(spark, dir).hint("shuffle_hash")
-          .join(Catalog.table(spark, dir, "documents")
-            .select(col("doc_id"), col("text")), Seq("doc_id"))
-          .withColumn("lt", length(col("text")))
-          .withColumn("lb0", (col("lt") / lit(EditMax + 1)).cast(LongType))
-          .withColumn("hist", array(col("lt") +: HistChars.map(c =>
-            length(col("text")) -
-              length(replace(col("text"), lit(c.toString), lit("")))): _*))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        lastHistCache = Some(df)
-        lastHistKey = Some((spark, dir))
-        df
-      }
-    }
+    // hist lane 0 = total length, lanes 1.. = tracked-char counts — the
+    // [[graft.expr.VectorExpressions.IntHistL1]] layout. Shuffle-hash pin
+    // (corpus ⋈ corpus on doc_id): unhinted, the planner's estimate
+    // broadcasts one corpus-sized side — see ngramCandidateFrame's
+    // scaladoc for the full finding. The hinted (narrow 16-byte simhash)
+    // side is the per-partition build.
+    graft.Landed.frame("dedup.editHist", spark, dir)(
+      simhashOf(spark, dir).hint("shuffle_hash")
+        .join(Catalog.table(spark, dir, "documents")
+          .select(col("doc_id"), col("text")), Seq("doc_id"))
+        .withColumn("lt", length(col("text")))
+        .withColumn("lb0", (col("lt") / lit(EditMax + 1)).cast(LongType))
+        .withColumn("hist", array(col("lt") +: HistChars.map(c =>
+          length(col("text")) -
+            length(replace(col("text"), lit(c.toString), lit("")))): _*)))
 
   private[graft] def editCandidateFrame(spark: SparkSession,
       dir: String): DataFrame = {
@@ -349,25 +305,16 @@ object Dedup {
   }
 
   def editDistanceNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val cand = editCandidateFrame(spark, dir)
     // The candidate set is BYTE-small but CPU-heavy (each pair costs a
     // ~90k-cell DP), and AQE coalesces the join's output to one partition
     // by SIZE — which would serialize ~65 s of Levenshtein onto one core
     // (measured at sf0.1). Re-spread pairs by key and persist: the cache
     // is the pushdown barrier that keeps the DP filter from being inlined
     // back below the repartition into the coalesced join stage (the
-    // dd3/dd6 persist-barrier pattern).
-    val spread = synchronized {
-      lastEditCache.foreach { prev =>
-        try prev.unpersist(blocking = false) catch { case _: Exception => }
-      }
-      val df = cand
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("doc_a"), col("doc_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      lastEditCache = Some(df)
-      df
-    }
+    // dd3/dd6 persist-barrier pattern), landed per (session, dir).
+    val spread = graft.Landed.frame("dedup.editPairs", spark, dir)(
+      editCandidateFrame(spark, dir).repartition(
+        spark.sessionState.conf.numShufflePartitions, col("doc_a"), col("doc_b")))
     spread
       // THRESHOLD form = banded DP (O(n·k) cells instead of O(n·m), -1
       // when the bound is exceeded) — exact for every kept distance
@@ -377,30 +324,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("edit_dist"))
       .orderBy("doc_a", "doc_b")
   }
-
-  private var lastEditCache: Option[DataFrame] = None
-
-  /** n-gram (word-bigram) Jaccard near-dup pairs: candidates via PPJoin
-    * PREFIX FILTERING (see [[prefixRows]]) restricted to the semantic
-    * (lang, token-length-bucket) block, then verified with exact bigram
-    * Jaccard.
-    *
-    * The SEMANTICS are the classic feature-blocked shape, complementary to
-    * dd3's LSH banding: a pair counts only when it shares language and a
-    * length bucket. The candidate GENERATOR, though, is no longer the
-    * within-block all-pairs join — r12's scale harness measured that
-    * honestly quadratic (block sizes grow with the corpus: 524k → 134.7M
-    * candidates at ×16). Prefix filtering keeps the equi-join shape (the
-    * join key is the rare-bigram hash + the block features) with EXACT
-    * recall at the 0.6 threshold, so the verified output — and the DuckDB
-    * oracle, which still spells the all-pairs block join — is unchanged
-    * while candidates scale ~linearly with the corpus. */
-  // previous dd6 invocation's persisted bigram frame (same lifecycle rules
-  // as lastShingleCache above), keyed by (session, dir): dd6/dd8/dd9/p1
-  // all consume this frame inside one session, and rebuilding it per
-  // caller paid the tokenize+shingle+hash pass three times per bench run
-  private var lastNgramCache: Option[DataFrame] = None
-  private var lastNgramKey: Option[(SparkSession, String)] = None
 
   /** Shared persisted (doc_id, lang, len_bucket, bg, n_bg) frame — built by
     * dd6 and reused by dd9's incremental variant. */
@@ -422,31 +345,17 @@ object Dedup {
     // filter, where each element_at re-tokenizes the document: O(tokens²)
     // interpreted work per row on the unparallelized side of the shuffle
     // (measured 8.6s -> ~2s at sf0.1).
-    synchronized {
-      // same (session, dir) and still persisted → reuse (the frame is a
-      // pure function of the immutable input table)
-      val reusable = lastNgramKey.contains((spark, dir)) &&
-        lastNgramCache.exists(
-          _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      if (reusable) lastNgramCache.get
-      else {
-        lastNgramCache.foreach { prev =>
-          try prev.unpersist(blocking = false) catch { case _: Exception => }
-        }
-        val df = Text.withTokens(Catalog.table(spark, dir, "documents"))
-          .filter(size(col("_toks")) >= 2)
-          .select(col("doc_id"), col("lang"),
-            floor(size(col("_toks")) / lit(16)).cast(LongType).as("len_bucket"),
-            array_sort(array_distinct(
-              transform(Text.shingles2(col("_toks")), t => Text.sharedHash(t))))
-              .as("bg"))
-          .withColumn("n_bg", size(col("bg")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        lastNgramCache = Some(df)
-        lastNgramKey = Some((spark, dir))
-        df
-      }
-    }
+    // Landed per (session, dir) (graft.Landed, barrier): dd6/dd8/dd9/p1
+    // all consume it inside one session.
+    graft.Landed.frame("dedup.bigrams", spark, dir)(
+      Text.withTokens(Catalog.table(spark, dir, "documents"))
+        .filter(size(col("_toks")) >= 2)
+        .select(col("doc_id"), col("lang"),
+          floor(size(col("_toks")) / lit(16)).cast(LongType).as("len_bucket"),
+          array_sort(array_distinct(
+            transform(Text.shingles2(col("_toks")), t => Text.sharedHash(t))))
+            .as("bg"))
+        .withColumn("n_bg", size(col("bg"))))
 
   /** Materialize (and memo) the shared bigram frame without running any
     * downstream stage — the scale harness's per-stage split pre-builds it
@@ -526,35 +435,15 @@ object Dedup {
   // frame. BILLING: Bench's untimed "dedup cluster labels" land builds it
   // (dd6's pipeline runs underneath), so dd9 times its OWN stage — the
   // incoming-slice probe + verify, the per-batch cost of the incremental
-  // contract. Same lifecycle as the sibling memos: storage-level gated,
-  // predecessor released, ARMED PlanCapture bypass (audits see the raw
-  // lineage), dir contents assumed immutable per session. The frame is a
+  // contract. A bypassing landed artifact (graft.Landed). The frame is a
   // CACHED corpus-derived artifact (the r15 flip class): every join that
   // reads it is SHUFFLE_HASH-pinned at the consumer, and the rarity
   // order it bakes in is corpus-wide — exactness of the prefix lemma
   // needs only that both join sides share ONE total order, which a
   // landed artifact satisfies by construction.
-  private var prefixRowsKey: Option[(SparkSession, String)] = None
-  private var prefixRowsCache: Option[DataFrame] = None
   private def prefixRowsShared(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      if (graft.plans.PlanCapture.sink.isDefined)
-        prefixRows(ngramBase(spark, dir))
-      else {
-        val hit = prefixRowsKey.contains((spark, dir)) &&
-          prefixRowsCache.exists(_.storageLevel !=
-            org.apache.spark.storage.StorageLevel.NONE)
-        if (!hit) {
-          prefixRowsCache.foreach { prev =>
-            try prev.unpersist(blocking = false) catch { case _: Exception => }
-          }
-          prefixRowsCache = Some(prefixRows(ngramBase(spark, dir))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          prefixRowsKey = Some((spark, dir))
-        }
-        prefixRowsCache.get
-      }
-    }
+    graft.Landed.frame("dedup.prefixRows", spark, dir, bypass = true)(
+      prefixRows(ngramBase(spark, dir)))
 
   /** dd6's candidate stage — PPJoin prefix-filtered pairs (see
     * [[prefixRows]]) within a (lang, length-bucket) block surviving the
@@ -635,39 +524,39 @@ object Dedup {
         col("n_bg").as("nb")).hint("shuffle_hash"), Seq("doc_b"))
   }
 
-  // dd6's VERIFIED pairs, memoized per (session, dir): the pair list is a
-  // pure function of the immutable corpus and orders of magnitude smaller
-  // than it, so it persists as a landed artifact — dd8's clustering and
+  // dd6's VERIFIED pairs, landed per (session, dir) (graft.Landed,
+  // barrier): the pair list is a pure function of the immutable corpus
+  // and orders of magnitude smaller than it, so dd8's clustering and
   // re-invocations join it instead of re-running the candidate verify
-  private var lastPairsCache: Option[DataFrame] = None
-  private var lastPairsKey: Option[(SparkSession, String)] = None
-
   private[graft] def verifiedNgramPairs(spark: SparkSession,
-      dir: String): DataFrame = synchronized {
-    val reusable = lastPairsKey.contains((spark, dir)) &&
-      lastPairsCache.exists(
-        _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    if (reusable) lastPairsCache.get
-    else {
-      lastPairsCache.foreach { prev =>
-        try prev.unpersist(blocking = false) catch { case _: Exception => }
-      }
-      val NgramThreshold = 0.6
-      // Jaccard via inclusion-exclusion (|∪| = na + nb - |∩|): one
-      // intersection count per candidate.
-      val nInt = call_function("sorted_intersect_count", col("bg_a"), col("bg_b"))
-      val df = ngramCandidateFrame(spark, dir)
+      dir: String): DataFrame = {
+    val NgramThreshold = 0.6
+    // Jaccard via inclusion-exclusion (|∪| = na + nb - |∩|): one
+    // intersection count per candidate.
+    val nInt = call_function("sorted_intersect_count", col("bg_a"), col("bg_b"))
+    graft.Landed.frame("dedup.pairs", spark, dir)(
+      ngramCandidateFrame(spark, dir)
         .withColumn("jaccard",
           nInt.cast(DoubleType) / (col("na") + col("nb") - nInt).cast(DoubleType))
         .filter(col("jaccard") >= NgramThreshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      lastPairsCache = Some(df)
-      lastPairsKey = Some((spark, dir))
-      df
-    }
+        .select(col("doc_a"), col("doc_b"), col("jaccard")))
   }
 
+  /** n-gram (word-bigram) Jaccard near-dup pairs: candidates via PPJoin
+    * PREFIX FILTERING (see [[prefixRows]]) restricted to the semantic
+    * (lang, token-length-bucket) block, then verified with exact bigram
+    * Jaccard.
+    *
+    * The SEMANTICS are the classic feature-blocked shape, complementary to
+    * dd3's LSH banding: a pair counts only when it shares language and a
+    * length bucket. The candidate GENERATOR, though, is no longer the
+    * within-block all-pairs join — r12's scale harness measured that
+    * honestly quadratic (block sizes grow with the corpus: 524k → 134.7M
+    * candidates at ×16). Prefix filtering keeps the equi-join shape (the
+    * join key is the rare-bigram hash + the block features) with EXACT
+    * recall at the 0.6 threshold, so the verified output — and the DuckDB
+    * oracle, which still spells the all-pairs block join — is unchanged
+    * while candidates scale ~linearly with the corpus. */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     verifiedNgramPairs(spark, dir).orderBy("doc_a", "doc_b")
 
@@ -970,11 +859,6 @@ object Dedup {
   /** Copy ids in the dd19 fixture sit this far above every base vec_id. */
   private[graft] val Dd19CopyIdOffset = 10000000L
 
-  /** landed fixture parquet per sf dir (land-once; values are a pure
-    * function of the dir's embeddings, so any session may reuse it) */
-  private val dd19FixturePaths =
-    scala.collection.mutable.Map.empty[String, String]
-
   /** Lands the dd19 NEAR-DUP FIXTURE once per dir (the serve family's
     * landed-artifact pattern): base embeddings plus ONE deterministic
     * jittered copy of every `vec_id % 7 == 3` vector, copy id = base id +
@@ -995,8 +879,8 @@ object Dedup {
     * what the hash oracle verifies (r17 verdict ask 3 — dd19 was the
     * one component verified by spec-equality instead of DuckDB). */
   private[graft] def dd19FixtureDir(spark: SparkSession,
-      dir: String): String = synchronized {
-    dd19FixturePaths.getOrElseUpdate(dir, {
+      dir: String): String =
+    landedFixture("dedup.dd19Fixture", dir) {
       val out = Catalog.tempDirWithCleanup("graft-dd19fx").toString + "/emb"
       val base = Similarity.emb(spark, dir)
       val copies = base.filter(col("vec_id") % 7 === 3)
@@ -1012,8 +896,7 @@ object Dedup {
         .coalesce(1)
         .write.mode("overwrite").parquet(out)
       out
-    })
-  }
+    }
 
   /** dd19's REGISTERED query: the production-threshold banded dedup served
     * over the landed near-dup fixture (the raw corpus has no cos ≥ 0.9
@@ -1034,11 +917,15 @@ object Dedup {
 
   // ---- dd20: measured recall AT the decision boundary -------------------
 
+  /** A fixture parquet landed per dir (values are a pure function of the
+    * dir's embeddings, so any session may reuse it); the previous dir's
+    * fixture files are deleted when it is displaced. */
+  private def landedFixture(name: String, dir: String)(land: => String): String =
+    graft.Landed[String](name, dir, _ => true, out =>
+      Catalog.deleteTempDir(java.nio.file.Paths.get(out).getParent))(land)
+
   /** Copy ids in the dd20 fixture sit this far above every base vec_id. */
   private[graft] val Dd20CopyIdOffset = 20000000L
-
-  private val dd20FixturePaths =
-    scala.collection.mutable.Map.empty[String, String]
 
   /** Lands the dd20 BOUNDARY fixture once per dir: base embeddings plus one
     * deterministic jittered copy of every `vec_id % 5 == 1` vector, copy id
@@ -1060,8 +947,8 @@ object Dedup {
     * probabilistic outcome (at sf0.01 two bucket-91 pairs miss: recall
     * 0.9794 overall; at sf0.1 two of 394: 0.9949; sf0.001 is lossless). */
   private[graft] def dd20FixtureDir(spark: SparkSession,
-      dir: String): String = synchronized {
-    dd20FixturePaths.getOrElseUpdate(dir, {
+      dir: String): String =
+    landedFixture("dedup.dd20Fixture", dir) {
       val out = Catalog.tempDirWithCleanup("graft-dd20fx").toString + "/emb"
       val base = Similarity.emb(spark, dir)
       val copies = base.filter(col("vec_id") % 5 === 1)
@@ -1077,8 +964,7 @@ object Dedup {
         .coalesce(1)
         .write.mode("overwrite").parquet(out)
       out
-    })
-  }
+    }
 
   /** dd20: RECALL OF THE PRODUCTION BANDED PIPELINE measured AT the
     * decision boundary (r17 verdict ask 1 — dd19's fixture verifies
@@ -1174,11 +1060,6 @@ object Dedup {
     * persisted and the previous round's cache is released, so lineage
     * stays O(1) deep.
     */
-  // final label frame of the previous dd8 invocation (same lifecycle rules
-  // as lastShingleCache above)
-  private var lastLabelsCache: Option[DataFrame] = None
-  private var lastLabelsKey: Option[(SparkSession, String)] = None
-
   /** CC rounds of the most recent [[dedupClusters]] fixpoint — scale-
     * harness telemetry: per-round cost is one groupBy over (doc_id,
     * label) longs, so rounds × edge-count is the whole shuffle story;
@@ -1186,108 +1067,69 @@ object Dedup {
     * per-copy property — copies replicate clusters, never deepen them). */
   @volatile private[graft] var lastCcRounds: Int = 0
 
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // Landed-labels reuse (r16): the converged labels are a pure function
-    // of the immutable corpus, so a LIVE memo for this exact (session,
-    // dir) serves the query the way dd6 serves its verified-pairs memo —
-    // production lands cluster ids once and every consumer joins them.
-    // Before this, only downstream stages (dd17/dd18/p1) rode the memo
-    // while dd8's own query re-ran the whole fixpoint per call (the
-    // bench's untimed land left dd8 itself still billing ~3 s of CC).
-    // lastCcRounds stays valid on a hit: the landed run's rounds ARE this
-    // dir's rounds (deterministic fixpoint).
-    // The hit path builds its output plan INSIDE the lock so the frame it
-    // references can't be swapped out between check and use; but a
-    // DataFrame is lazy, so a concurrent slow-path entrant can still
-    // unpersist the frame before the caller EXECUTES it, and
-    // Dataset.storageLevel reports the requested level, not block
-    // residency (a budget-demoted cache passes the check with zero
-    // resident blocks). Both cases degrade to a deterministic lineage
-    // recompute — correct results, just a "memo hit" that quietly bills
-    // like a miss (r17 advice; accepted, not fixed: the memo is a bench
-    // attribution device, not a correctness device).
-    val hit = synchronized {
-      if (lastLabelsKey.contains((spark, dir)) &&
-          lastLabelsCache.exists(_.storageLevel != StorageLevel.NONE))
-        lastLabelsCache.map(clusterOutput)
-      else None
-    }
-    hit.foreach(out => return out)
-    synchronized {
-      lastLabelsCache.foreach { prev =>
-        try prev.unpersist(blocking = false) catch { case _: Exception => }
-      }
-      lastLabelsCache = None
-      lastLabelsKey = None
-    }
-    val pairs = verifiedNgramPairs(spark, dir)
-      .select(col("doc_a"), col("doc_b"))
-    // both directions: label pressure must flow low->high AND high->low
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val docs = Catalog.table(spark, dir, "documents").select(col("doc_id"))
-    var labels = docs.withColumn("label", col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // failure discipline: a throw anywhere in the fixpoint (executor OOM
-    // at blow-up scale, a killed Verify) must not strand this
-    // invocation's persisted frames for the session — lastLabelsCache was
-    // cleared at entry, so nothing would ever release them. Success keeps
-    // `labels` pinned (it IS the registered cache); everything else is
-    // released on the way out.
-    try {
-      var converged = false
-      var rounds = 0
-      while (!converged) {
-        rounds += 1
-        // each doc keeps min(own label, neighbors' labels)
-        val fromNbrs = labels.join(edges, labels("doc_id") === edges("doc_a"))
-          .select(col("doc_b").as("doc_id"), col("label"))
-        val next = labels.select(col("doc_id"), col("label")).union(fromNbrs)
-          .groupBy(col("doc_id")).agg(min(col("label")).as("label"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val improved =
-          try next.as("n")
-            .join(labels.as("o"), col("n.doc_id") === col("o.doc_id"))
-            .filter(col("n.label") < col("o.label")).count()
-          catch { case t: Throwable =>
-            try next.unpersist(blocking = false) catch { case _: Exception => }
-            throw t
-          }
-        labels.unpersist(blocking = false)
-        labels = next
-        converged = improved == 0
-      }
-      lastCcRounds = rounds
-    } catch { case t: Throwable =>
-      try labels.unpersist(blocking = false) catch { case _: Exception => }
-      throw t
-    } finally edges.unpersist(blocking = false)
-    synchronized {
-      // unpersist whatever this registration DISPLACES: the clear at
-      // entry and this register are separate critical sections with the
-      // whole fixpoint loop between them, so a concurrent dd8 call can
-      // have registered its own converged frame in the meantime — the
-      // check-then-act hazard the ngramBase scaladoc documents (leaving
-      // it would strand a persisted MEMORY_AND_DISK copy for the session)
-      lastLabelsCache.filter(_ ne labels).foreach { prev =>
-        try prev.unpersist(blocking = false) catch { case _: Exception => }
-      }
-      lastLabelsCache = Some(labels)
-      // the converged labels are a pure function of the (immutable) input
-      // corpus — later same-session consumers (p1) reuse them as a landed
-      // artifact instead of re-running dd6's verify + the CC fixpoint
-      lastLabelsKey = Some((spark, dir))
-    }
-    // materialization safety: the returned frame references the final
-    // persisted labels; callers that hold it past the next dd8 call would
-    // recompute from lineage, which is correct (deterministic fixpoint)
-    clusterOutput(labels)
-  }
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    clusterOutput(clusterLabels(spark, dir))
 
-  /** dd8's output shape over a (doc_id, label) labels frame — shared by
-    * the fixpoint path and the landed-memo fast path. */
+  /** dd8's converged (doc_id, label) frame, landed per (session, dir)
+    * (graft.Landed, barrier): the labels are a pure function of the
+    * immutable corpus, so dd8 itself and its downstream stages
+    * (dd17/dd18/p1) join the landed frame instead of re-running the
+    * fixpoint — production lands cluster ids once (r16). lastCcRounds
+    * stays valid on a hit: the landed run's rounds ARE this dir's rounds
+    * (deterministic fixpoint). Dataset.storageLevel reports the requested
+    * level, not block residency, so a hit on a budget-demoted cache
+    * recomputes from lineage: correct, just billed like a miss (r17
+    * advice; the landing is a bench attribution device, not a
+    * correctness device). */
+  private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.Landed.pinned("dedup.labels", spark, dir) {
+      import org.apache.spark.storage.StorageLevel
+      val pairs = verifiedNgramPairs(spark, dir)
+        .select(col("doc_a"), col("doc_b"))
+      // both directions: label pressure must flow low->high AND high->low
+      val edges = pairs
+        .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val docs = Catalog.table(spark, dir, "documents").select(col("doc_id"))
+      var labels = docs.withColumn("label", col("doc_id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // failure discipline: a throw anywhere in the fixpoint (executor OOM
+      // at blow-up scale, a killed Verify) must not strand this
+      // invocation's persisted frames for the session — nothing registers
+      // them on failure. Success keeps `labels` pinned (it IS the landed
+      // value); everything else is released on the way out.
+      try {
+        var converged = false
+        var rounds = 0
+        while (!converged) {
+          rounds += 1
+          // each doc keeps min(own label, neighbors' labels)
+          val fromNbrs = labels.join(edges, labels("doc_id") === edges("doc_a"))
+            .select(col("doc_b").as("doc_id"), col("label"))
+          val next = labels.select(col("doc_id"), col("label")).union(fromNbrs)
+            .groupBy(col("doc_id")).agg(min(col("label")).as("label"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val improved =
+            try next.as("n")
+              .join(labels.as("o"), col("n.doc_id") === col("o.doc_id"))
+              .filter(col("n.label") < col("o.label")).count()
+            catch { case t: Throwable =>
+              try next.unpersist(blocking = false) catch { case _: Exception => }
+              throw t
+            }
+          labels.unpersist(blocking = false)
+          labels = next
+          converged = improved == 0
+        }
+        lastCcRounds = rounds
+      } catch { case t: Throwable =>
+        try labels.unpersist(blocking = false) catch { case _: Exception => }
+        throw t
+      } finally edges.unpersist(blocking = false)
+      labels
+    }
+
+  /** dd8's output shape over a (doc_id, label) labels frame. */
   private def clusterOutput(labels: DataFrame): DataFrame =
     labels
       .withColumn("cluster_size", count(lit(1)).over(
@@ -1315,16 +1157,8 @@ object Dedup {
     // cluster ids are a LANDED artifact of this session when dd8 already
     // converged them for the same input (production lands cluster ids
     // once and every downstream stage joins them); cold callers compute
-    val memoLabels = synchronized {
-      if (lastLabelsKey.contains((spark, dir)) &&
-          lastLabelsCache.exists(_.storageLevel !=
-            org.apache.spark.storage.StorageLevel.NONE))
-        lastLabelsCache
-      else None
-    }
-    val clusters = memoLabels
-      .map(_.select(col("doc_id"), col("label").as("cluster_id")))
-      .getOrElse(dedupClusters(spark, dir).select(col("doc_id"), col("cluster_id")))
+    val clusters = clusterLabels(spark, dir)
+      .select(col("doc_id"), col("label").as("cluster_id"))
     val base = Text.withTokens(Catalog.table(spark, dir, "documents"))
       .select(col("doc_id"), col("lang"),
         size(col("_toks")).cast(LongType).as("n_tokens"), md5(col("text")).as("fp"))
@@ -1366,16 +1200,8 @@ object Dedup {
     * dedup threshold collapsed). */
   def canonicalKeep(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val memoLabels = synchronized {
-      if (lastLabelsKey.contains((spark, dir)) &&
-          lastLabelsCache.exists(_.storageLevel !=
-            org.apache.spark.storage.StorageLevel.NONE))
-        lastLabelsCache
-      else None
-    }
-    val clusters = memoLabels
-      .map(_.select(col("doc_id"), col("label").as("cluster_id")))
-      .getOrElse(dedupClusters(spark, dir).select(col("doc_id"), col("cluster_id")))
+    val clusters = clusterLabels(spark, dir)
+      .select(col("doc_id"), col("label").as("cluster_id"))
     // the shared quality memo is a CACHED corpus-derived frame — its
     // attach is SHUFFLE_HASH-pinned (the r15 flip class: accurate
     // post-cache stats would broadcast a corpus-proportional side at
@@ -1567,42 +1393,21 @@ object Dedup {
   // labels / quality-features discipline). dd11 — alphabetically first —
   // bills the build; dd13 times the stage that differentiates it (sketch
   // build + bloom-pruned join). Both queries' OWN joins stay in their
-  // plans (the memo holds no joins), so the audits' flag walks and
-  // DedupSpec's probe-below-join pin read through the InMemoryRelation
-  // unchanged; the harness clearCache invalidates (storage-level gate).
-  // Like the sibling memos (qualityShared, buildRankedMemo), an ARMED
-  // PlanCapture sink bypasses the memo (r19, closing the r18-advice
-  // asymmetry): audits get the raw un-memoized lineage by construction,
-  // not by call ordering. Assumes the dir's contents are immutable for
-  // the session (the fixture convention all three memos share).
-  private var shingledKey: Option[(SparkSession, String)] = None
-  private var shingledCache: Option[DataFrame] = None
-  private def shingledFresh(spark: SparkSession, dir: String): DataFrame = {
+  // plans (the landed frame holds no joins), so the audits' flag walks
+  // and DedupSpec's probe-below-join pin read through the
+  // InMemoryRelation unchanged. A bypassing landed artifact
+  // (graft.Landed).
+  private def shingledShared(spark: SparkSession, dir: String): DataFrame = {
     val h = PipelineOps.splitHash("split")
     val split =
       when(h < 800, "train").when(h < 900, "val").otherwise(lit("test"))
-    Text.withTokens(Catalog.table(spark, dir, "documents"))
-      .filter(size(col("_toks")) >= 5)
-      .select(col("doc_id"), split.as("split"),
-        array_distinct(transform(Text.shingles5(col("_toks")),
-          s => Text.sharedHash(s))).as("shh"))
+    graft.Landed.frame("dedup.shingled5", spark, dir, bypass = true)(
+      Text.withTokens(Catalog.table(spark, dir, "documents"))
+        .filter(size(col("_toks")) >= 5)
+        .select(col("doc_id"), split.as("split"),
+          array_distinct(transform(Text.shingles5(col("_toks")),
+            s => Text.sharedHash(s))).as("shh")))
   }
-  private def shingledShared(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      if (graft.plans.PlanCapture.sink.isDefined) shingledFresh(spark, dir)
-      else {
-        val hit = shingledKey.contains((spark, dir)) &&
-          shingledCache.exists(_.storageLevel !=
-            org.apache.spark.storage.StorageLevel.NONE)
-        if (!hit) {
-          shingledCache.foreach(_.unpersist())
-          shingledCache = Some(shingledFresh(spark, dir)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          shingledKey = Some((spark, dir))
-        }
-        shingledCache.get
-      }
-    }
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     // the shared shingled frame (see shingledShared): both the test-set
@@ -1650,12 +1455,10 @@ object Dedup {
       spark: SparkSession, dir: String): DataFrame = {
     graft.expr.BloomFunctions.register(spark)
     // the shared shingled frame (see shingledShared): test-distinct,
-    // sketch build and train probe all read it; the memo owns the pin and
-    // its lifecycle. The handle is NOT returned (r19, the r18-advice
-    // ownership fix): callers used to unpersist it in a finally, which was
-    // correct-but-surprising once the frame became memo-owned — an
-    // unpersist mid-session just evicted blocks a later consumer silently
-    // rebuilt. Invalidation is clearCache / the storage-level gate.
+    // sketch build and train probe all read it; graft.Landed owns the pin,
+    // so the handle is NOT returned (r19): callers used to unpersist it in
+    // a finally, which just evicted blocks a later consumer silently
+    // rebuilt.
     val sh = shingledShared(spark, dir)
     val flagged = {
     sh.select(col("doc_id"), col("split"), size(col("shh")).as("n_sh"),

@@ -396,7 +396,7 @@ object Extended {
     * protocol, making re-runs idempotent in one JVM. Oracle: the same
     * aggregate straight over parquet — write → read must be lossless. */
   def blockStoreWrite(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"written:$dir"
+    val store = graft.Landed.store("written:", dir)
     Catalog.table(spark, dir, "documents")
       .write.format("graft.sources.BlockStoreSource")
       .option("store", store).mode("overwrite").save()
@@ -484,7 +484,8 @@ object Extended {
   }
 
   def blockStoreSql(spark: SparkSession, dir: String): DataFrame =
-    withBlockTable(spark, dir, "graft_block_table", s"sql:$dir", "x36_docs") {
+    withBlockTable(spark, dir, "graft_block_table",
+        graft.Landed.store("sql:", dir), "x36_docs") {
       eager(spark, spark.sql(
         """SELECT source, lang,
           |       CAST(count(*) AS BIGINT) AS n_docs,
@@ -747,7 +748,8 @@ object Extended {
     * filters. Unsupported predicates fail at ANALYSIS (canDeleteWhere =
     * false — no silent partial delete), spec-asserted. */
   def blockStoreDelete(spark: SparkSession, dir: String): DataFrame = {
-    withBlockTable(spark, dir, "graft_del_table", s"del:$dir", "x39_docs") {
+    withBlockTable(spark, dir, "graft_del_table",
+        graft.Landed.store("del:", dir), "x39_docs") {
       spark.sql("DELETE FROM graft_del_table WHERE lang = 'de'")
       spark.sql(s"DELETE FROM graft_del_table WHERE doc_id >= $DeleteIdFloor")
       eager(spark, spark.sql(
@@ -797,7 +799,7 @@ object Extended {
     * Versions are addressed relative to `currentVersion` so re-runs
     * (which accumulate history) stay deterministic. */
   def blockStoreTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"tt:$dir"
+    val store = graft.Landed.store("tt:", dir)
     withBlockTable(spark, dir, "graft_tt_table", store, "x41_docs") {
       spark.sql("DELETE FROM graft_tt_table WHERE lang = 'de'")
       val vBefore = graft.sources.BlockStore.currentVersion(store) - 1
@@ -864,7 +866,7 @@ object Extended {
     * linestatus, so dictionary stats and pruning work unchanged. */
   private[graft] def ensureColumnarStore(spark: SparkSession, dir: String): String =
     synchronized {
-      val name = s"colstore:$dir"
+      val name = graft.Landed.store("colstore:", dir)
       if (graft.sources.BlockStore.blockCount(name) == 0) {
         Catalog.table(spark, dir, "lineitem")
           .select((col("l_orderkey") * 8 + col("l_linenumber"))
@@ -896,7 +898,7 @@ object Extended {
     * mechanics (block-count drop, preserved range clustering, pre-
     * optimize version intact) are spec-asserted. */
   def blockStoreOptimize(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"optstore:$dir"
+    val name = graft.Landed.store("optstore:", dir)
     graft.sources.BlockStore.dropStore(name)
     val docs = Catalog.table(spark, dir, "documents")
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
@@ -935,8 +937,8 @@ object Extended {
     * the oracle computes the same post-merge state declaratively from
     * parquet (LEFT JOIN for the updates, UNION ALL for the inserts). */
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame =
-    withBlockTable(spark, dir, "graft_merge_table", s"merge:$dir",
-      "x46_docs") {
+    withBlockTable(spark, dir, "graft_merge_table",
+        graft.Landed.store("merge:", dir), "x46_docs") {
       // the update source is corpus-PROPORTIONAL by this query's contract
       // (a fixed fraction of the corpus), so it must never broadcast-pin
       // by stats into the rewrite's joins — the r17 eager audit caught the
@@ -1001,8 +1003,8 @@ object Extended {
     * unbounded statement, and the per-lang inventory it returns is the
     * |langs|+2-row sync report. */
   def mergeSyncFull(spark: SparkSession, dir: String): DataFrame =
-    withBlockTable(spark, dir, "graft_merge_sync_table", s"mergesync:$dir",
-      "x47_docs") {
+    withBlockTable(spark, dir, "graft_merge_sync_table",
+        graft.Landed.store("mergesync:", dir), "x47_docs") {
       val maxId = spark.table("x47_docs")
         .agg(max(col("doc_id"))).head.getLong(0)
       require(maxId < 100000000L,

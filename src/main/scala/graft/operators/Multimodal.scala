@@ -226,34 +226,18 @@ object Multimodal {
     * scale harness — the bands are 16-BIT, so the candidate count carries
     * an incidental term ~4·C(n,2)/2^16 beyond the true (linear) pairs
     * (the fixed-width banding trade, same model as dd15's simhash). */
-  // mm6's signature frame, memoized persisted per (session, dir) — the
-  // dd3/ngramBase discipline: one invocation otherwise re-runs the
-  // 72-sample typed dHash map FOUR times (both band-join sides + both
-  // verify attaches; only the Exchange below it is reused, not the map),
-  // and Scale's candidate counter pays it again. Displacement unpersists
-  // the frame it replaces.
-  private var lastSigCache: Option[org.apache.spark.sql.DataFrame] = None
-  private var lastSigKey: Option[(SparkSession, String)] = None
-
+  // mm6's signature frame, landed per (session, dir) (graft.Landed,
+  // barrier) — the dd3/ngramBase discipline: one invocation otherwise
+  // re-runs the 72-sample typed dHash map FOUR times (both band-join
+  // sides + both verify attaches; only the Exchange below it is reused,
+  // not the map), and Scale's candidate counter pays it again.
   private def sigsFor(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = synchronized {
-    val reusable = lastSigKey.contains((spark, dir)) &&
-      lastSigCache.exists(
-        _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    if (reusable) lastSigCache.get
-    else {
-      lastSigCache.foreach { prev =>
-        try prev.unpersist(blocking = false) catch { case _: Exception => }
-      }
+      : org.apache.spark.sql.DataFrame =
+    graft.Landed.frame("multimodal.sigs", spark, dir) {
       val base = Catalog.tableSpread(spark, dir, "documents")
         .select(col("doc_id"), col("text"))
-      val df = sigFrame(spark, base.unionAll(perturbedCopies(base)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      lastSigCache = Some(df)
-      lastSigKey = Some((spark, dir))
-      df
+      sigFrame(spark, base.unionAll(perturbedCopies(base)))
     }
-  }
 
   private[graft] def perceptualPieces(spark: SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -329,7 +313,7 @@ object Multimodal {
     * image modality). */
   private[graft] def ensurePhashIndex(spark: SparkSession,
       dir: String): String = synchronized {
-    val name = s"phashidx@$dir"
+    val name = graft.Landed.store("phashidx@", dir)
     if (graft.sources.BlockStore.blockCount(name) == 0) {
       val base = Catalog.tableSpread(spark, dir, "documents")
         .select(col("doc_id"), col("text"))

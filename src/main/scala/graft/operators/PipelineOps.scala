@@ -383,8 +383,8 @@ object PipelineOps {
   /** Shard manifest with the per-shard quality envelope, materialized
     * eagerly so the pinned pass-1 sort is released here — shared by p8 and
     * p10 (one place to change the manifest shape, two oracles mirror it).
-    * `release = false` leaves the pin alive for a MEMO owner (p10's
-    * [[buildRankedMemo]] — its lifecycle rules apply). */
+    * `release = false` leaves the pin alive for its landed owner (p10's
+    * [[buildRankedMemo]]). */
   private def curriculumManifest(spark: SparkSession, ranked: RangeRank.Ranked,
       release: Boolean = true): DataFrame = {
     val agg = ranked.df
@@ -476,33 +476,17 @@ object PipelineOps {
   def corpusBuild(spark: SparkSession, dir: String): DataFrame =
     curriculumManifest(spark, buildRankedMemo(spark, dir), release = false)
 
-  // p10/p11 share ONE build per (session, dir) — the dd6/dd8 memo
+  // p10/p11 share ONE build per (session, dir) — the dd6/dd8 landing
   // discipline (r18): production runs the curation pipeline ONCE and both
   // the manifest (p10) and the landed shard layout (p11) are views of
   // that single build, so each query times ITS OWN stage (the Scale
   // "op's-own-stage" rule) instead of the second-alphabetically query
-  // re-billing the whole pipeline. Gate on the pinned sort's LIVE
-  // storage level (Dataset.storageLevel — a clearCache invalidates the
-  // memo and the next caller rebuilds + re-pins); the predecessor entry
-  // is released on replacement, nothing is left for the harness to find.
-  private var buildRankedKey: Option[(SparkSession, String)] = None
-  private var buildRankedCache: Option[RangeRank.Ranked] = None
+  // re-billing the whole pipeline. A bypassing landed artifact
+  // (graft.Landed), live while its pinned sort is.
   private def buildRankedMemo(spark: SparkSession, dir: String): RangeRank.Ranked =
-    synchronized {
-      // an ARMED capture sink must observe the full construction plans
-      // (the eager audit / ScaleSpec adjudication runs) — never serve a
-      // memo hit that would hide the build's joins from an audit
-      val hit = graft.plans.PlanCapture.sink.isEmpty &&
-        buildRankedKey.contains((spark, dir)) &&
-        buildRankedCache.exists(_.sortedFrame.storageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE)
-      if (!hit) {
-        buildRankedCache.foreach(_.release())
-        buildRankedCache = Some(buildRanked(spark, dir))
-        buildRankedKey = Some((spark, dir))
-      }
-      buildRankedCache.get
-    }
+    graft.Landed[RangeRank.Ranked]("pipeline.buildRanked", (spark, dir),
+      _.sortedFrame.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      _.release(), fresh = graft.Landed.capturing)(buildRanked(spark, dir))
 
   /** p10's survivors with their running token total — the frame p10
     * aggregates into the manifest and p11 physically LANDS as
@@ -570,9 +554,9 @@ object PipelineOps {
     * throw 'Unable to infer schema' instead of the empty manifest the
     * oracle legitimately produces (the s10/s26 empty-output guard). */
   def landShards(spark: SparkSession, dir: String): DataFrame = {
-    // rides the shared build memo (see buildRankedMemo): the land step
-    // times the WRITE + READ-BACK, not a second run of the whole curation
-    // pipeline; the memo owns the pin, so no release here
+    // rides the landed build (see buildRankedMemo): the land step times
+    // the WRITE + READ-BACK, not a second run of the whole curation
+    // pipeline; the landing owns the pin, so no release here
     val ranked = buildRankedMemo(spark, dir)
     val out = shardStoreDir
     ranked.df
@@ -760,7 +744,7 @@ object PipelineOps {
     * comparison (md5 equality stands in for byte equality); both sides
     * are dictionary/stat-prunable store scans. */
   def snapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"diff:$dir"
+    val store = graft.Landed.store("diff:", dir)
     val docs = Catalog.table(spark, dir, "documents")
     def land(df: DataFrame): Unit =
       df.write.format("graft.sources.BlockStoreSource")

@@ -1136,8 +1136,8 @@ object Similarity {
 
   private[graft] def ensureLandedIndex(spark: SparkSession,
       dir: String): (String, String) = synchronized {
-    val idxName = s"annidx@$dir"
-    val metaName = s"annmeta@$dir"
+    val idxName = graft.Landed.store("annidx@", dir)
+    val metaName = graft.Landed.store("annmeta@", dir)
     // idempotence keys on the META store — the artifact written LAST: a
     // build that died between the index write and the meta write must
     // rebuild, not serve (keying on the index store made such a partial
@@ -1368,8 +1368,8 @@ object Similarity {
     * O(batch) incremental contract, now for the ANN index). */
   private[graft] def ensureAppendedIndex(spark: SparkSession,
       dir: String): (String, String) = synchronized {
-    val idxName = s"annidx2@$dir"
-    val metaName = s"annmeta2@$dir"
+    val idxName = graft.Landed.store("annidx2@", dir)
+    val metaName = graft.Landed.store("annmeta2@", dir)
     // guard on the artifact finished LAST + drop partial remains first;
     // on ANY failure mid-build both stores are dropped so a retry
     // rebuilds instead of serving a half-built generation (stores are
@@ -1491,9 +1491,9 @@ object Similarity {
     * the same predicate. */
   private[graft] def ensureTombstonedIndex(spark: SparkSession,
       dir: String): (String, String, String) = synchronized {
-    val idxName = s"annidx3@$dir"
-    val metaName = s"annmeta3@$dir"
-    val tombName = s"anntomb3@$dir"
+    val idxName = graft.Landed.store("annidx3@", dir)
+    val metaName = graft.Landed.store("annmeta3@", dir)
+    val tombName = graft.Landed.store("anntomb3@", dir)
     // same failure-atomicity discipline as ensureAppendedIndex: a build
     // that died after the full land but before the tombstone/stat
     // correction must rebuild, never serve uncorrected stats
@@ -1578,7 +1578,7 @@ object Similarity {
   private[graft] def ensureCompactedIndex(spark: SparkSession,
       dir: String): (String, String) = synchronized {
     val (idx, meta, tomb) = ensureTombstonedIndex(spark, dir)
-    val cName = s"annidx4@$dir"
+    val cName = graft.Landed.store("annidx4@", dir)
     if (graft.sources.BlockStore.blockCount(cName) == 0) {
       def rd(n: String) = spark.read
         .format("graft.sources.BlockStoreSource").option("store", n).load()

@@ -1259,8 +1259,8 @@ object BlockStore {
     * the (current, previous) store names. */
   def ensureShardedSnapshots(spark: SparkSession, dir: String): (String, String) =
     synchronized {
-      val a = s"spj_cur@$dir"
-      val b = s"spj_prev@$dir"
+      val a = graft.Landed.store("spj_cur@", dir)
+      val b = graft.Landed.store("spj_prev@", dir)
       // the pair is one fixture: if EITHER half is missing, rebuild BOTH
       // from clean state — guarding on `a` alone let a partial drop
       // either re-load into a surviving `b` (loadSharded put()s APPEND:
@@ -1290,14 +1290,10 @@ object BlockStore {
     * answer. (A same-width pair elides both, the x37 path.) */
   private[graft] def ensureWidthMismatched(spark: SparkSession,
       dir: String): String = synchronized {
-    val name = s"spj_wide@$dir"
+    val name = graft.Landed.store("spj_wide@", dir)
     if (!stores.containsKey(name)) {
-      val (_, width) = shardedMeta.get(s"spj_cur@${dir}") match {
-        case null => // co-registered pair not built yet: build it first
-          ensureShardedSnapshots(spark, dir)
-          shardedMeta.get(s"spj_cur@$dir")
-        case m => m
-      }
+      val (cur, _) = ensureShardedSnapshots(spark, dir)
+      val width = shardedMeta.get(cur)._2
       loadSharded(spark, name, Catalog.table(spark, dir, "documents"),
         width * 2)
     }
@@ -1312,7 +1308,7 @@ object BlockStore {
     * [[BlockStoreSource]]). */
   private[graft] def ensureChunkedSnapshot(spark: SparkSession,
       dir: String): String = synchronized {
-    val name = s"spj_chunk@$dir"
+    val name = graft.Landed.store("spj_chunk@", dir)
     if (!stores.containsKey(name)) {
       val (cur, _) = ensureShardedSnapshots(spark, dir)
       val width = shardedMeta.get(cur)._2
@@ -1330,7 +1326,7 @@ object BlockStore {
     * range layout every block mixes all languages and a lang predicate
     * can skip nothing. Used by the dictionary-pruning spec. */
   def ensureLangClustered(spark: SparkSession, dir: String): String = synchronized {
-    val name = s"bylang:$dir"
+    val name = graft.Landed.store("bylang:", dir)
     if (!stores.containsKey(name)) {
       Catalog.table(spark, dir, "documents")
         .repartition(8, col("lang"))
@@ -1351,7 +1347,7 @@ object BlockStore {
     * stats discipline as x31's layout (hash-partitioned blocks would all
     * span the full key range and prune nothing). */
   def ensureLoaded(spark: SparkSession, dir: String): String = synchronized {
-    val name = s"documents:$dir"
+    val name = graft.Landed.store("documents:", dir)
     if (!stores.containsKey(name)) {
       Catalog.table(spark, dir, "documents")
         .repartitionByRange(16, col("doc_id"))

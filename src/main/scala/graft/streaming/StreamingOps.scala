@@ -139,22 +139,21 @@ object StreamingOps {
     // Explicit checkpoint dir (r19): Spark's implicit temp checkpoint
     // always lands under java.io.tmpdir; routing through
     // tempDirWithCleanup honors the SPARK_GRAFT_TMPDIR override so the
-    // offset/commit/state logs can sit on fast storage (cleanup via the
-    // shared shutdown hook — Spark only auto-deletes IMPLICIT temp
-    // checkpoints).
-    val chk = Catalog.tempDirWithCleanup("graft-chk").toString + "/chk"
-    val q = startClamped(spark) {
-      df.writeStream.outputMode(mode).format("memory")
-        .option("checkpointLocation", chk)
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-    }
+    // offset/commit/state logs can sit on fast storage.
+    val chkDir = Catalog.tempDirWithCleanup("graft-chk")
     // Materialize eagerly into a LocalRelation and drop the sink view right
     // away: the returned frame then stays valid however many streaming
     // queries run afterwards. The memory sink already pins the full result
     // on the driver, so this copy does not change the memory envelope. The
     // drop sits in a finally so a failed query cannot leak its sink view
-    // (and the rows it pins) for the session lifetime.
+    // (and the rows it pins) for the session lifetime; the checkpoint goes
+    // with it, since the returned frame never reads it.
     try {
+      val q = startClamped(spark) {
+        df.writeStream.outputMode(mode).format("memory")
+          .option("checkpointLocation", s"$chkDir/chk")
+          .queryName(name).trigger(Trigger.AvailableNow()).start()
+      }
       drain(q)
       // stash state telemetry before the query object goes out of scope:
       // the LAST progress with state operators carries the final state
@@ -178,6 +177,7 @@ object StreamingOps {
         java.util.Arrays.asList(sink.collect(): _*), sink.schema)
     } finally {
       try spark.catalog.dropTempView(name) catch { case _: Exception => }
+      Catalog.deleteTempDir(chkDir)
     }
   }
 
@@ -703,7 +703,7 @@ object StreamingOps {
     * tails an unbounded store with checkpointed offsets; per-batch cost is
     * bounded by the trigger cap, state by |langs|. */
   def blockStoreStream(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"streamed:$dir"
+    val store = graft.Landed.store("streamed:", dir)
     // land-once guard (the s25/s27 pattern, r16 review): the store is a
     // pure function of dir — re-runs were paying a redundant 16-task
     // overwrite job per invocation
@@ -781,7 +781,8 @@ object StreamingOps {
         }
         .trigger(Trigger.AvailableNow()).start()
     }
-    drain(q)
+    // the result is the accumulated rows, never the checkpoint
+    try drain(q) finally Catalog.deleteTempDir(base)
     val rows = acc.synchronized { acc.toIndexedSeq }
     // no-probe drains get the statically-declared empty frame — the old
     // fallback ran the whole serve pipeline (probe collect + meta-store
@@ -813,7 +814,7 @@ object StreamingOps {
     * therefore global doc_id order — the oracle's ROW_NUMBER. */
   def streamSourceQuota(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val src = s"quota-src:$dir"
+    val src = graft.Landed.store("quota-src:", dir)
     if (graft.sources.BlockStore.blockCount(src) == 0)
       Catalog.table(spark, dir, "documents")
         .write.format("graft.sources.BlockStoreSource")
@@ -850,8 +851,8 @@ object StreamingOps {
     * blocks land per epoch, readers tail the store (s21) while it grows,
     * per-epoch cost bounded by the trigger cap. */
   def streamBlockSink(spark: SparkSession, dir: String): DataFrame = {
-    val src = s"sinkstream-src:$dir"
-    val dst = s"sinkstream-dst:$dir"
+    val src = graft.Landed.store("sinkstream-src:", dir)
+    val dst = graft.Landed.store("sinkstream-dst:", dir)
     // src lands once per dir (the s25/s27 guard); dst's drop below must
     // stay — the sink store and its epoch watermark reset together
     if (graft.sources.BlockStore.blockCount(src) == 0)
@@ -870,7 +871,8 @@ object StreamingOps {
       .option("checkpointLocation", s"$base/chk")
       .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow()).start()
-    drain(q)
+    // the result reads the dst store back, never the checkpoint
+    try drain(q) finally Catalog.deleteTempDir(base)
     spark.read.format("graft.sources.BlockStoreSource")
       .option("store", dst).load()
       .groupBy(col("source"), col("lang"))
@@ -892,9 +894,9 @@ object StreamingOps {
     * oracle IS sim13's. Per-batch cost: |batch| encodes + a bounded
     * |cells|×64 stats merge; the landed corpus is never rescanned. */
   def streamAnnIngest(spark: SparkSession, dir: String): DataFrame = {
-    val idx = s"annidx5@$dir"
-    val meta = s"annmeta5@$dir"
-    val feed = s"annfeed@$dir"
+    val idx = graft.Landed.store("annidx5@", dir)
+    val meta = graft.Landed.store("annmeta5@", dir)
+    val feed = graft.Landed.store("annfeed@", dir)
     // fresh INDEX lifecycle per run: the stream restarts at epoch 0 with a
     // new checkpoint, so the index/meta stores and their epoch watermarks
     // reset together. The FEED is a pure fixture (the arrival source, not
@@ -925,7 +927,8 @@ object StreamingOps {
             .streamIngestAppend(spark, dir, idx, meta, ids)
       }
       .trigger(Trigger.AvailableNow()).start()
-    drain(q)
+    // the serve reads the index stores, never the checkpoint
+    try drain(q) finally Catalog.deleteTempDir(base)
     graft.operators.Similarity.streamIngestServe(spark, dir, idx, meta)
   }
 
@@ -978,7 +981,7 @@ object StreamingOps {
   }
 
   def streamContextChunks(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"chunkstream:$dir"
+    val store = graft.Landed.store("chunkstream:", dir)
     if (graft.sources.BlockStore.blockCount(store) == 0)
       Catalog.table(spark, dir, "documents")
         .write.format("graft.sources.BlockStoreSource")
