@@ -17,7 +17,8 @@ With no --controls, every query present in both files is used as its own
 control population (robust when only a few queries changed: the median of
 all ratios estimates the host factor). Output: the host factor, the control
 band, and per-query normalized ratios sorted by |log ratio|, with the gc /
-shuffle / spill deltas that decide recipe step 1-3 vs 4.
+shuffle / spill deltas that decide recipe step 1-3 vs 4, plus the codegen_s /
+plan_s / jobs deltas when both files carry those maps.
 """
 import argparse, json, math, sys
 
@@ -124,7 +125,14 @@ def main():
             why = f"gc {dgc:+.2f}s: session GC debt, re-run with controls"
         else:
             why = "flat aux metrics: likely residual host noise — isolate A/B"
-        print(f"{q:30s} {qa[q]:7.2f} {qb[q]:7.2f} {r:6.2f} {n:6.2f}  {why}")
+        # phase deltas, when both files carry the Measure record's maps
+        # (the committed bench.json and BENCH_r*.json predate them)
+        phases = " ".join(
+            f"{k} {aux(b, k, q) - aux(a, k, q):+.{p}f}"
+            for k, p in (("codegen_s", 2), ("plan_s", 2), ("jobs", 0))
+            if k in a and k in b)
+        print(f"{q:30s} {qa[q]:7.2f} {qb[q]:7.2f} {r:6.2f} {n:6.2f}  {why}"
+              + (f"  [{phases}]" if phases else ""))
     if flagged == 0:
         print("(no query moved outside the control band — all host noise)")
     print(f"\n{flagged} flagged / {len(common)} common queries")

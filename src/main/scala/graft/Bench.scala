@@ -1,41 +1,12 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-/** Fleet-wide task-metric accumulator for the bench — the Spark-native
-  * analogue of the reference's listener bus for block/shuffle events
-  * (`/root/reference/src/main/scala/org/scache/scheduler/ScacheListener.scala:24-106`):
-  * every task-end event folds its shuffle read/write and spill bytes into
-  * JVM-wide counters, and [[Bench]] snapshots the deltas per query. The
-  * resulting per-query maps ride bench.json beside the gc map, so the
-  * "plan regression vs GC spike vs shuffle growth" triage reads from the
-  * artifact: elapsed up + gc up + shuffle flat = session GC; elapsed up +
-  * shuffle up = the plan actually moves more data; all flat = host noise. */
-private[graft] class BenchTaskMetricsListener extends SparkListener {
-  val shuffleRead = new AtomicLong(0)
-  val shuffleWrite = new AtomicLong(0)
-  val spill = new AtomicLong(0)
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-    val m = e.taskMetrics
-    if (m != null) {
-      shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead): Unit
-      shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-      spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled): Unit
-    }
-  }
-}
+import scala.collection.mutable
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus),
-      "graft-bench").getOrCreate()
+    val spark = Engine.session("graft-bench", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // fail loudly before timing anything if the testdata encoding has
     // drifted from Catalog's declared physical contract (r9 lesson)
@@ -58,29 +29,31 @@ object Bench {
         .groupBy("tok").count()
         .write.mode("overwrite").format("noop").save()
     } catch { case _: Throwable => }
-    // table layouts for the bucketed-join / partition-pruning queries:
-    // built once here so x18/x19 time the read-side plan, not the one-time
-    // write a deployment amortizes. Own catch + log: a silent failure here
-    // would invisibly shift the write cost back into x18/x19's timings.
-    try operators.Coverage.prepareLayouts(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] layout pre-build failed (x18/x19 will pay the write): $e")
-    }
     // landed serving artifacts (documents block store, ANN index, perceptual
     // index): built ONCE per deployment and served many times — land them
     // untimed here so the serve-family queries (sim15/18/19/21, s23, s26,
     // mm7) time the SERVE path, not whichever of them alphabetically pays
     // the shared one-time build (the prepareLayouts discipline; sim16/s25
     // still time their own incremental/streaming BUILDS, which are the
-    // measured operators there). Same loud-failure contract as above.
+    // measured operators there).
     // per-item try: one artifact's failure must not skip the INDEPENDENT
     // later builds (a shared try made an ensureLandedIndex error silently
-    // shift mm7's and x44's build costs into their timed windows too)
-    def land(what: String)(f: => Unit): Unit =
-      try f catch { case e: Throwable =>
+    // shift mm7's and x44's build costs into their timed windows too).
+    // Each land's seconds (-1 = failed) go to the artifact's `lands` map:
+    // untimed is not unrecorded.
+    val lands = mutable.LinkedHashMap[String, Double]()
+    def land(what: String)(f: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      lands(what) = try { f; (System.nanoTime() - t0) / 1e9 } catch { case e: Throwable =>
         System.err.println(
           s"[bench] $what pre-build failed (its serve queries will pay the build): $e")
+        -1.0
       }
+    }
+    // table layouts for the bucketed-join / partition-pruning queries:
+    // built once here so x18/x19 time the read-side plan, not the one-time
+    // write a deployment amortizes
+    land("layouts")(operators.Coverage.prepareLayouts(spark, sfDir))
     land("docs store")(sources.BlockStore.ensureLoaded(spark, sfDir): Unit)
     // dd8's cluster labels (and the dd6 verified-pairs memo underneath):
     // production lands cluster ids once beside the corpus and every keep/
@@ -111,60 +84,12 @@ object Bench {
     // timing (diagnostics only; the driver runs the full registry)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // cumulative stop-the-world GC millis across all collectors — the
-    // per-query DELTA separates "slow plan" from "GC debt came due here"
-    // (the r7 adjudication needed a judge-side isolated re-run to tell a
-    // session spike from a regression; gc_sec answers it from the artifact)
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-    }
-    // per-query shuffle/spill deltas (see BenchTaskMetricsListener): the
-    // event bus is drained at each boundary so a straggler task-end never
-    // lands in the next query's window
-    val tm = new BenchTaskMetricsListener
-    spark.sparkContext.addSparkListener(tm)
-    // one WARNING on first drain failure (then silent): a broken bridge
-    // degrades every per-query shuffle/spill window to cross-query bleed,
-    // and that must be visible in the log, not discovered from confusing
-    // triage maps a round later (r16 review)
-    var drainWarned = false
-    def drain(): Unit =
-      try org.apache.spark.GraftListenerBridge
-        .drainListenerEvents(spark.sparkContext)
-      catch { case t: Throwable =>
-        if (!drainWarned) {
-          drainWarned = true
-          System.err.println("[bench] WARNING listener drain failed — " +
-            s"per-query shuffle/spill attribution degraded: $t")
-        }
-      }
+    val measure = Measure.install(spark)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-      drain()
-      val (sr0, sw0, sp0) = (tm.shuffleRead.get, tm.shuffleWrite.get, tm.spill.get)
-      val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      // noop sink materializes every output row exactly as planned —
-      // count() would let the optimizer prune projections and eliminate
-      // sorts (EliminateSorts), understating e.g. the Terasort query to a
-      // bare scan
-      val ok = try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      }
-      // -1 marks failure in the JSON — a thrown query must not read as a
-      // (fast) success
-      val elapsed = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // GC delta over the SAME window as elapsed (before the untimed
-      // forced collection below — there is no blanket clearCache: see
-      // the cache-lifecycle note under it)
-      val gcSec = (gcMillis() - gc0) / 1e3
-      drain()
-      val shuffle = (tm.shuffleRead.get - sr0, tm.shuffleWrite.get - sw0,
-        tm.spill.get - sp0)
+      val r = measure.window(sfDir)(fn)
+      r.error.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
       // Cache lifecycle is owned by graft.Landed (one live entry per
       // artifact, released on displacement), not by a blanket
       // clearCache here: r12 made dd6's bigram frame / verified pairs /
@@ -180,31 +105,33 @@ object Bench {
       // gap between timed sections, so each query's number reflects its
       // plan, not whichever GC debt happened to come due during it.
       System.gc()
-      name -> (elapsed, gcSec, shuffle)
-    }.toMap
-    // sorted per-query map: deterministic key order makes round-over-round
-    // diffs of the artifact line up textually. The per-query GC seconds go
-    // in a PARALLEL "gc" map (same keys) rather than turning the "queries"
-    // values into objects — downstream consumers parse queries:{name:sec}.
-    def jmap(f: ((Double, Double, (Long, Long, Long))) => Any): String =
-      results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + f(v) }
+      // -1 marks failure in the JSON — a thrown query must not read as a
+      // (fast) success
+      name -> ((if (r.ok) r.seconds else -1.0), r.metrics)
+    }
+    // sorted per-query maps: deterministic key order makes round-over-round
+    // diffs of the artifact line up textually. Every record key goes in a
+    // PARALLEL map (same query keys, 0 where a window saw none) rather
+    // than turning the "queries" values into objects — downstream
+    // consumers parse queries:{name:sec}.
+    def jmap(f: ((Double, Map[String, Double])) => Double): String =
+      results.map { case (k, v) => s"\"$k\":${Measure.num(f(v))}" }
         .mkString("{", ",", "}")
-    val qs = jmap(_._1)
-    val gcs = jmap(_._2)
-    // per-query shuffle/spill BYTES beside the gc map — the triage maps
-    // (see BenchTaskMetricsListener scaladoc for the recipe)
-    val srs = jmap(_._3._1)
-    val sws = jmap(_._3._2)
-    val sps = jmap(_._3._3)
+    val keys = Measure.Keys ++
+      (results.flatMap(_._2._2.keys).toSet -- Measure.Keys).toSeq.sorted
+    val maps = (("queries" -> jmap(_._1)) +: keys.map(k => k -> jmap(_._2.getOrElse(k, 0.0))))
+      .map { case (k, m) => s""""$k":$m""" }.mkString(",")
+    val landsJson = lands.map { case (k, v) => s""""$k":${Measure.num(v)}""" }
+      .mkString("{", ",", "}")
     // total sums successes only — a failed query's -1 sentinel must not
     // understate the total (failure is reported separately, not as speed)
-    val total = results.values.map(_._1).filter(_ >= 0).sum
-    val failures = results.values.count(_._1 < 0)
+    val total = results.map(_._2._1).filter(_ >= 0).sum
+    val failures = results.count(_._2._1 < 0)
     // provenance: the committed baseline must be ONE uninterrupted
     // cold-session full run — a merged or filtered artifact must say so
     val provenance = if (only.isDefined) "bench_only" else "full_session"
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"provenance":"$provenance","queries":$qs,"gc":$gcs,"shuffle_read":$srs,"shuffle_write":$sws,"spill":$sps,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"provenance":"$provenance",$maps,"lands":$landsJson,"sf":"$sfDir"}"""
     println(json)
     // full machine-readable artifact: the driver's stdout tail truncates
     // long runs (r2 lost 24 of 85 per-query entries), so the complete JSON
@@ -244,7 +171,7 @@ object Bench {
       System.err.println(s"[bench] $benchPath write failed: $e")
     }
     // COMPACT summary as the LAST stdout line (r18 verdict item 2): the
-    // full five-map line above is ~28 KB at 201 queries and the driver's
+    // full line above is tens of KB at 201 queries and the driver's
     // captured stdout tail (~2 KB) truncates it mid-map — two rounds of
     // BENCH_r*.json read `parsed: null` and the driver's per-query perf
     // table came up empty. The tail always captures the LAST line, so a

@@ -41,8 +41,8 @@ object Engine {
       .getOrCreate()
   }
 
-  /** Apply engine defaults to any builder (used by Verify/Bench which pick
-    * their own master/parallelism from the driver environment). */
+  /** Apply engine defaults to any builder (for callers that pick their own
+    * master and session settings). */
   def configure(b: SparkSession.Builder, appName: String): SparkSession.Builder = b
     .appName(appName)
     // explicit multi-key sorts radix-sort their leading key and order the

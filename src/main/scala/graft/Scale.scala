@@ -461,7 +461,7 @@ object Scale {
     // derived but r15 never measured — cos ≥ 0.9 over 45 × 16-bit bands,
     // where the incidental floor is 45/2^16 ≈ 0.069% and candidates ≈
     // true pairs ≪ corpus × bands. Measured A/B of the two verify shapes
-    // (same host, back-to-back; graft.Dd19Ab):
+    // (same host, back-to-back):
     //
     //   factor  cand       corpus×bands  pair-attach        ride-in
     //   ×1      244        90,000        3.6 s / 0.01 GB    2.5 s / 0.07 GB
@@ -709,45 +709,24 @@ object Scale {
       sec / ctl <= runtimeBound(model, factor, baseSec / baseCtl)
     else sec <= runtimeBound(model, factor, baseSec)
 
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-  }
+  /** The session's measure, installed once by main — a scale row carries
+    * the same record as a bench.json query (the r14 verdict's ask: the ×32
+    * runtime step should be NAMEABLE from the artifact alone). */
+  private var measure: Measure = _
 
-  /** The fleet-wide task-metrics listener (Bench's own), installed once
-    * by main — timed runs read shuffle/spill deltas off it so a scale row
-    * carries the same triage columns as bench.json (the r14 verdict's ask:
-    * the ×32 runtime step should be NAMEABLE from the artifact alone). */
-  private var taskMetrics: BenchTaskMetricsListener = _
-
-  /** One measured row: (rows, elapsedSec, gcSec, shuffleBytes, spillBytes)
-    * of one registered-query run through the bench's noop-sink protocol. */
+  /** One measured row: the row count of one registered-query run through
+    * the bench's measurement window. The row count is a SECOND, untimed
+    * execution — operator-level memos make it cheaper than the timed run,
+    * and timing fidelity beats harness wall-clock here (a persist inside
+    * the window would bill cache materialization/spill to the query). */
   private def timed(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
-      dir: String): (Long, Double, Double, Long, Long) = {
-    // timing protocol = the bench's bare noop save (a persist inside the
-    // window would bill cache materialization/spill to the query and
-    // distort cross-round comparisons); the row count is a SECOND,
-    // untimed execution — operator-level memos make it cheaper than the
-    // timed run, and timing fidelity beats harness wall-clock here
-    org.apache.spark.GraftListenerBridge
-      .drainListenerEvents(spark.sparkContext)
-    val (sr0, sw0, sp0) = (taskMetrics.shuffleRead.get,
-      taskMetrics.shuffleWrite.get, taskMetrics.spill.get)
-    val gc0 = gcMillis()
-    val t0 = System.nanoTime()
-    fn(spark, dir).write.mode("overwrite").format("noop").save()
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    val gcSec = (gcMillis() - gc0) / 1e3
-    org.apache.spark.GraftListenerBridge
-      .drainListenerEvents(spark.sparkContext)
-    val shuffle = taskMetrics.shuffleRead.get - sr0 +
-      taskMetrics.shuffleWrite.get - sw0
-    val spill = taskMetrics.spill.get - sp0
+      dir: String): (Long, Measure.Record) = {
+    val m = measure.window(dir)(fn)
+    m.error.foreach(e => throw e)
     val rows = fn(spark, dir).count()
     try spark.catalog.clearCache() catch { case _: Throwable => }
     System.gc()
-    (rows, elapsed, gcSec, shuffle, spill)
+    (rows, m.copy(frame = None, executed = None))
   }
 
   /** Do found rows track N× the base? EXACT for hash-free dd6 blocking
@@ -1262,19 +1241,9 @@ object Scale {
     require(factors.headOption.contains(1) && factors == factors.sorted,
       s"factors must start at 1 and ascend (got ${factors.mkString(",")})")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus),
-      "graft-scale").getOrCreate()
+    val spark = Engine.session("graft-scale", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    taskMetrics = new BenchTaskMetricsListener
-    spark.sparkContext.addSparkListener(taskMetrics)
-    // A/B knob for the partition-count mechanism (see SCALE.md): raise
-    // AQE's pre-coalesce partition count without touching the session's
-    // committed 32-partition posture
-    sys.env.get("SPARK_GRAFT_INIT_PARTITIONS").foreach(v =>
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", v))
+    measure = Measure.install(spark)
     val sfName = java.nio.file.Paths.get(baseDir).getFileName.toString
     val outRoot = s"/tmp/graft-scale-$sfName"
     // untimed setup: synthesize every factor's corpus, then the bench's
@@ -1322,8 +1291,8 @@ object Scale {
         // per-task overhead, while per-partition memory was not the
         // binding constraint — the ×64 spill is the candidate-distinct
         // partial aggregate going external, which is linear and healthy
-        // (see spillBound). The SPARK_GRAFT_INIT_PARTITIONS env knob
-        // remains for re-running that A/B.
+        // (see spillBound). Measured and declined: the sweep runs the
+        // session's partition count.
         op.setup(spark, dir) // untimed artifact land (the bench discipline)
         // (the r15 stage-split edit dropped this call for two commits —
         // sim15's index land then billed into its timed serve window,
@@ -1343,9 +1312,12 @@ object Scale {
           val m = timed(spark, op.query, dir)
           (stageMs, ctl, m)
         }
-        val (stageMs, ctlSec, (rows, sec, gcSec, shuffle, spill)) =
-          runs.sortBy(_._3._2).apply(runs.size / 2)
-        val secRuns = runs.map(_._3._2)
+        val (stageMs, ctlSec, (rows, rec)) =
+          runs.sortBy(_._3._2.seconds).apply(runs.size / 2)
+        val sec = rec.seconds
+        val r = rec.metrics
+        val spill = r("spill").toLong
+        val secRuns = runs.map(_._3._2.seconds)
         val ctlRuns = runs.map(_._2)
         val ctlRatio = if (ctlSec > 0) sec / ctlSec else -1.0
         val cand = op.candidates(spark, dir)
@@ -1367,9 +1339,13 @@ object Scale {
           if (kvs.isEmpty) "" else kvs.mkString(",", ",", "")
             .stripSuffix(",")
         }
+        // the record's keys beside the row's own (gc/spill are the row's
+        // gc_sec/spill_bytes; an op extra of the same name wins)
+        val recordJson = Measure.fields(r -- extras.keySet - "gc" - "spill")
         lines += s"""{"op":"${op.name}","factor":$n,"rows":$rows,""" +
-          s""""candidates":$cand,"sec":$sec,"gc_sec":$gcSec,""" +
-          s""""shuffle_bytes":$shuffle,"spill_bytes":$spill,""" +
+          s""""candidates":$cand,"sec":$sec,"gc_sec":${r("gc")},""" +
+          s""""shuffle_bytes":${(r("shuffle_read") + r("shuffle_write")).toLong},""" +
+          s""""spill_bytes":$spill,$recordJson,""" +
           s""""control_sec":$ctlSec,"control_ratio":$ctlRatio,""" +
           s""""sec_runs":[${secRuns.mkString(",")}],""" +
           s""""control_runs":[${ctlRuns.mkString(",")}]""" +

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,11 +18,7 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown query name(s) in subset filter: ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus),
-      "graft-verify").getOrCreate()
+    val spark = Engine.session("graft-verify", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // fail loudly BEFORE producing any output if the testdata encoding has
     // drifted from Catalog's declared physical contract (r9 lesson)

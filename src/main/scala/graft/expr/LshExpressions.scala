@@ -59,7 +59,7 @@ object RandomHyperplanes {
     * [[Dim]], and that cross-plane correlation collapsed the measured
     * 48-band recall to ~62% where the independent-planes math predicts
     * ~93%. sim3/sim12 keep the legacy family — a decision r16 MEASURED
-    * rather than assumed ([[graft.Sim12RecallAb]], pinned in
+    * rather than assumed (the Sim12Recall profile, pinned in
     * SimilaritySpec): the correlation is present at sim12's shape (the
     * 3-band OR multiplies recall ×1.75 where independent bands deliver
     * ×2.6), but the legacy planes' component bias makes ~2× larger

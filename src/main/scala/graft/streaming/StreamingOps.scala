@@ -95,15 +95,6 @@ object StreamingOps {
     * feeds stay ≤ 33 batches. */
   @volatile private[graft] var lastStateRowsPeak: Long = -1L
 
-  /** Diagnostics-only progress capture (r19 micro-batch-floor rig): when
-    * armed by [[graft.R19Probe]], [[drain]] stashes the drained query's full
-    * progress JSONs (durationMs phase breakdown per micro-batch) so the
-    * probe can attribute the per-query floor to offset-log/plan/state/sink
-    * phases from the artifact. Off (and costless beyond a volatile read)
-    * under Verify/Bench. */
-  @volatile private[graft] var captureProgress = false
-  @volatile private[graft] var lastProgressJson: Seq[String] = Nil
-
   /** Await the drained AvailableNow query AND, when the corpus-broadcast
     * audit's capture sink is armed ([[graft.plans.PlanCapture]]), offer the
     * LAST micro-batch's executed plan to it — micro-batch executions
@@ -115,8 +106,6 @@ object StreamingOps {
     * reflection only runs when a sink is armed, i.e. inside an audit). */
   private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     q.awaitTermination()
-    if (captureProgress)
-      lastProgressJson = q.recentProgress.toSeq.map(_.json)
     if (graft.plans.PlanCapture.sink.isDefined) {
       try {
         val se = q.getClass.getMethod("streamingQuery").invoke(q)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Band-LSH recall profiler (r16 VERDICT ask #4): price sim12's 3-band-OR
+/** Band-LSH recall profile (r16 VERDICT ask #4): price sim12's 3-band-OR
   * top-k recall under the legacy correlated LCG plane family
   * ([[graft.expr.RandomHyperplanes.planeVal]]) against dd16's independent
   * splitmix family ([[graft.expr.RandomHyperplanes.dedupPlaneVal]]), at
@@ -36,12 +36,12 @@ import org.apache.spark.sql.expressions.Window
   *      whose contract is recall against dd5's exact pair set — runs
   *      splitmix, where the multi-band OR is the whole mechanism.
   */
-object Sim12RecallAb {
+object Sim12Recall {
   import graft.expr.RandomHyperplanes._
 
   /** (candidate rows, mean recall@k) of a bands-OR candidate join over
     * the first 10 vec_ids as probes, ranked by exact cosine. */
-  private[graft] def profile(spark: SparkSession, dir: String,
+  def profile(spark: SparkSession, dir: String,
       plane: (Int, Int) => Long, bands: Int, k: Int): (Long, Double) = {
     graft.expr.VectorExpressions.register(spark)
     def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
@@ -87,22 +87,5 @@ object Sim12RecallAb {
       }
       (nCand, perProbe.sum / perProbe.size)
     } finally { all.unpersist(): Unit }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val k = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = Engine.configure(
-      SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", 16),
-      "sim12-recall-ab").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    for ((label, plane) <- Seq("legacy" -> (planeVal _),
-        "splitmix" -> (dedupPlaneVal _)); bands <- Seq(1, NumBands)) {
-      val (cand, recall) = profile(spark, dir, plane, bands, k)
-      println(f"[recall-ab] $label%8s bands=$bands dir=$dir " +
-        f"cand=$cand recall@$k=$recall%.3f")
-    }
-    spark.stop()
   }
 }

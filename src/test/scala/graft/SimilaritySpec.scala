@@ -412,13 +412,13 @@ class SimilaritySpec extends SparkSpec {
     // here is DETERMINISTIC (fixed corpus, fixed plane literals), so the
     // bounds are tight to the committed sf0.1 fixture — a regenerated
     // corpus re-rolls the constants and should re-run the decision via
-    // graft.Sim12RecallAb. Full numbers in Sim12RecallAb's scaladoc.
+    // Sim12Recall.profile. Full numbers in Sim12Recall's scaladoc.
     val dir = "/root/testdata/sf0.1"
     import graft.expr.RandomHyperplanes.{planeVal, dedupPlaneVal, NumBands}
-    val (lc1, lr1) = Sim12RecallAb.profile(spark, dir, planeVal, 1, 10)
-    val (lc3, lr3) = Sim12RecallAb.profile(spark, dir, planeVal, NumBands, 10)
-    val (sc1, sr1) = Sim12RecallAb.profile(spark, dir, dedupPlaneVal, 1, 10)
-    val (sc3, sr3) = Sim12RecallAb.profile(spark, dir, dedupPlaneVal, NumBands, 10)
+    val (lc1, lr1) = Sim12Recall.profile(spark, dir, planeVal, 1, 10)
+    val (lc3, lr3) = Sim12Recall.profile(spark, dir, planeVal, NumBands, 10)
+    val (sc1, sr1) = Sim12Recall.profile(spark, dir, dedupPlaneVal, 1, 10)
+    val (sc3, sr3) = Sim12Recall.profile(spark, dir, dedupPlaneVal, NumBands, 10)
     // independent bands: the 3-band OR serves ~exactly 3x the candidates
     // (disjoint equal-rate bands; measured 344 -> 1032)
     assert(sc3 >= sc1 * 27 / 10 && sc3 <= sc1 * 33 / 10,
@@ -438,7 +438,7 @@ class SimilaritySpec extends SparkSpec {
     // migrating sim12 would reduce what its top-k contract prices
     assert(lr3 > sr3,
       s"legacy absolute recall@10 ($lr3) no longer beats splitmix ($sr3) " +
-        "at 3 bands — re-run the Sim12RecallAb keep-vs-migrate decision")
+        "at 3 bands — re-run the Sim12Recall keep-vs-migrate decision")
     // sim3 — the SINGLE-band user of the same legacy family — gets the
     // same measured keep-decision (r17 verdict ask 6): at 1 band the
     // legacy planes' component bias makes ~2.5× bigger buckets (measured
@@ -449,7 +449,7 @@ class SimilaritySpec extends SparkSpec {
     // splitmix — that rule is pinned above via the multiplier gap.
     assert(lr1 > sr1,
       s"sim3's 1-band keep-decision inverted: legacy recall@10 ($lr1) " +
-        s"must beat splitmix ($sr1) — re-run Sim12RecallAb and " +
+        s"must beat splitmix ($sr1) — re-run Sim12Recall and " +
         "re-adjudicate the plane family")
     assert(lc1 > sc1 * 2,
       s"the mechanism behind sim3's keep-decision (legacy's ~2.5× bucket " +

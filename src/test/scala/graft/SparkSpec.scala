@@ -30,6 +30,12 @@ object TestSession {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.util.ExecutionListenerBus",
       org.apache.logging.log4j.Level.FATAL)
+    // ...and the V2 write path's abort walls (DataWritingSparkTask,
+    // OverwriteByExpressionExec) for ListenerTelemetrySpec's expected
+    // failing noop write
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.datasources.v2",
+      org.apache.logging.log4j.Level.FATAL)
     s
   }
 }
