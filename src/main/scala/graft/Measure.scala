@@ -76,7 +76,7 @@ final class Measure private (spark: SparkSession)
     settle()
     val a = take()
     val (reduceMax, reduceMedian) = reduceSkew(a.reduceStages.values.map(_.toSeq))
-    Record(error.isEmpty, seconds,
+    Record(seconds,
       Zero ++ a.n ++ Map("gc" -> gc, "codegen_s" -> codegen,
         "no_task_s" -> idleSeconds(a.taskSpans.toSeq, from, to),
         "reduce_max_s" -> reduceMax, "reduce_median_s" -> reduceMedian),
@@ -196,13 +196,15 @@ final class Measure private (spark: SparkSession)
 }
 
 object Measure {
-  /** One window: `ok` is false when building or running the query threw
-    * (`error`). `frame` is the built query and `executed` the last SQL
-    * execution of the window — the noop write's, whose plan is AQE-final
-    * where the frame's own `queryExecution.executedPlan` is not. */
-  final case class Record(ok: Boolean, seconds: Double, metrics: Map[String, Double],
+  /** One window: `error` is what building or running the query threw.
+    * `frame` is the built query and `executed` the last SQL execution of
+    * the window — the noop write's, whose plan is AQE-final where the
+    * frame's own `queryExecution.executedPlan` is not. */
+  final case class Record(seconds: Double, metrics: Map[String, Double],
       error: Option[Throwable], frame: Option[DataFrame],
-      executed: Option[QueryExecution])
+      executed: Option[QueryExecution]) {
+    def ok: Boolean = error.isEmpty
+  }
 
   /** The keys every record carries, 0 when the window saw none. Bytes:
     * `shuffle_read`, `shuffle_write`, `spill`; seconds: `gc` and the `_s`
